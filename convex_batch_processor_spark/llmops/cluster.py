@@ -35,34 +35,88 @@ import pandas as pd  # module-level: pandas_udf resolves the stringified
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+def nearest_centroid_batch(s: pd.Series, ids: list, mat: list) -> pd.DataFrame:
+    """(cluster_id, dist2) per vector of one Arrow batch: nearest centroid
+    by squared L2, centroids given as ``ids`` (sorted ascending) and the
+    matching rows of ``mat``.
+
+    Replicates the former JVM HOF fold BIT-FOR-BIT: float32 elements
+    widen to float64 (exact), (x−c)² is one IEEE multiply on identical
+    operands, and the per-row accumulation runs in INDEX ORDER (an
+    explicit per-dimension loop — np.sum's pairwise reduction would
+    drift in the last ulp).
+
+    Argmin tiebreak: np.argmin takes the first minimum over the sorted
+    ids — identical to the former array_min over (dist2, cluster_id)
+    structs. NULL or dimension-mismatched vectors get (lowest cluster_id,
+    NULL dist2), matching the former NULL-fold path. A NaN element makes
+    every distance NaN, so the vector takes the lowest cluster_id
+    (np.inf masking) and its NaN dist2 reaches the JVM as NULL: Arrow
+    conversion treats a pandas NaN as missing. (A NULL *element* inside a
+    non-NULL vector arrives as NaN through Arrow and takes the same
+    path — no input class produces one: vectors are synthesized dense.)
+    An empty batch returns an empty frame.
+    """
+    import numpy as np  # noqa: PLC0415
+
+    vals = s.to_numpy()
+    n = len(vals)
+    if n == 0:
+        return pd.DataFrame(
+            {"cluster_id": np.empty(0, dtype=np.int64), "dist2": np.empty(0, dtype=np.float64)}
+        )
+    C = np.asarray(mat, dtype=np.float64)
+    cid = np.asarray(ids, dtype=np.int64)
+    k, d = C.shape
+    valid = np.fromiter(
+        (v is not None and len(v) == d for v in vals), dtype=bool, count=n
+    )
+    out_c = np.full(n, cid[0], dtype=np.int64)
+    if valid.all():
+        X = np.concatenate(list(vals)).reshape(n, d).astype(np.float64)
+    elif valid.any():
+        X = (
+            np.concatenate([np.asarray(v) for v in vals[valid]])
+            .reshape(-1, d)
+            .astype(np.float64)
+        )
+    else:
+        return pd.DataFrame(
+            {"cluster_id": out_c, "dist2": np.full(n, None, dtype=object)}
+        )
+    D = np.empty((X.shape[0], k))
+    for j in range(k):
+        sq = X - C[j]
+        sq *= sq
+        acc = sq[:, 0].copy()
+        for t in range(1, d):  # index-order fold == the JVM aggregate
+            acc += sq[:, t]
+        D[:, j] = acc
+    am = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
+    dv = D[np.arange(X.shape[0]), am]
+    out_c[valid] = cid[am]
+    if valid.all():
+        dist2 = dv
+    else:
+        dist2 = np.full(n, None, dtype=object)
+        dist2[valid] = [float(x) for x in dv]
+    return pd.DataFrame({"cluster_id": out_c, "dist2": dist2})
+
+
 def _l2_assign_rows(
     embeddings: DataFrame, cent_rows: list, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, vec, cluster_id, dist2): nearest centroid per vector by squared
-    L2 — one Arrow-batched map-side projection (guide §4.2).
+    L2 — one Arrow-batched map-side projection (guide §4.2) running
+    :func:`nearest_centroid_batch`.
 
     The model state (``cent_rows``: (cluster_id, centroid) pairs, k·dim
     doubles) rides in the UDF closure; only the vector column crosses the
-    Python boundary. The numpy kernel replicates the former JVM HOF fold
-    BIT-FOR-BIT: float32 elements widen to float64 (exact), (x−c)² is one
-    IEEE multiply on identical operands, and the per-row accumulation runs
-    in INDEX ORDER (an explicit per-dimension loop — np.sum's pairwise
-    reduction would drift in the last ulp), so the assignment and dist2
-    hash-match the engine-portable oracle exactly as the interpreted
-    zip_with/aggregate fold did — at ~10× the throughput (the fold is
-    CodegenFallback: interpreted per element, k·dim Catalyst evals per
-    row; the r12 codegen-unroll attempt made it 4-20× SLOWER, see
-    OPTIMIZATION_r12.md).
-
-    Argmin tiebreak: centroids are sorted by cluster_id and np.argmin
-    takes the first minimum — identical to the former array_min over
-    (dist2, cluster_id) structs. NULL or dimension-mismatched vectors get
-    (lowest cluster_id, NULL dist2), matching the former NULL-fold path;
-    a NaN element yields NaN dist2 for every centroid and the lowest
-    cluster_id (np.inf masking), matching Spark's NaN-largest ordering.
-    (A NULL *element* inside a non-NULL vector arrives as NaN through
-    Arrow and is scored as NaN rather than the JVM's NULL — no input
-    class produces one: vectors are synthesized dense.)
+    Python boundary. The numpy kernel hash-matches the engine-portable
+    oracle exactly as the interpreted zip_with/aggregate fold did — at
+    ~10× the throughput (the fold is CodegenFallback: interpreted per
+    element, k·dim Catalyst evals per row; the r12 codegen-unroll attempt
+    made it 4-20× SLOWER, see OPTIMIZATION_r12.md).
     """
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
@@ -77,46 +131,7 @@ def _l2_assign_rows(
     # centroid matrix rebuild per batch is noise next to the batch math.
     @pandas_udf("struct<cluster_id: bigint, dist2: double>")
     def _assign(s: pd.Series) -> pd.DataFrame:
-        import numpy as np  # noqa: PLC0415
-
-        C = np.asarray(mat, dtype=np.float64)
-        cid = np.asarray(ids, dtype=np.int64)
-        k, d = C.shape
-        vals = s.to_numpy()
-        n = len(vals)
-        valid = np.fromiter(
-            (v is not None and len(v) == d for v in vals), dtype=bool, count=n
-        )
-        out_c = np.full(n, cid[0], dtype=np.int64)
-        if valid.all():
-            X = np.concatenate(list(vals)).reshape(n, d).astype(np.float64)
-        elif valid.any():
-            X = (
-                np.concatenate([np.asarray(v) for v in vals[valid]])
-                .reshape(-1, d)
-                .astype(np.float64)
-            )
-        else:
-            return pd.DataFrame(
-                {"cluster_id": out_c, "dist2": np.full(n, None, dtype=object)}
-            )
-        D = np.empty((X.shape[0], k))
-        for j in range(k):
-            sq = X - C[j]
-            sq *= sq
-            acc = sq[:, 0].copy()
-            for t in range(1, d):  # index-order fold == the JVM aggregate
-                acc += sq[:, t]
-            D[:, j] = acc
-        am = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
-        dv = D[np.arange(X.shape[0]), am]
-        out_c[valid] = cid[am]
-        if valid.all():
-            dist2 = dv
-        else:
-            dist2 = np.full(n, None, dtype=object)
-            dist2[valid] = [float(x) for x in dv]
-        return pd.DataFrame({"cluster_id": out_c, "dist2": dist2})
+        return nearest_centroid_batch(s, ids, mat)
 
     return (
         embeddings.select(id_col, vec_col)

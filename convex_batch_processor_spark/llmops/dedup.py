@@ -1,23 +1,34 @@
-"""Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, Winnowing, LSH near-dup (MinHash,
+SimHash), edit distance, sorted neighborhood, substring scrubbing.
 
 Design for 100 TB:
 - Exact dedup is a hash-groupBy on a content digest — one shuffle on the
   digest, perfectly parallel, no skew (digests are uniform).
-- MinHash-LSH turns the quadratic near-dup problem into: signatures (narrow,
-  one pass), band buckets (explode ×n_bands), candidate generation
-  (self-join on band bucket — only colliding docs meet), then exact Jaccard
-  verification on the tiny candidate set. Shuffle volume is
-  O(n_docs × n_bands), never O(n_docs²).
-- SimHash blocks by 16-bit chunks (a Hamming-≤3 pair must agree on ≥1 of 4
-  chunks), same join-on-block pattern.
-- All hash functions are xxhash64 with literal seeds — deterministic across
-  runs/executors, which keeps re-runs idempotent (the engine's at-least-once
-  story, SURVEY.md §2.9 D5).
+- LSH near-dup is ONE pipeline, whatever the hash family:
+  signatures → band keys → candidate pairs → verify. Signatures are
+  narrow and built in one groupBy pass (:func:`minhash_signatures`,
+  :func:`simhash_signatures`); each signature is cut into band keys
+  (MinHash bands, SimHash chunks, hyperplane buckets in similarity.py);
+  :func:`band_join` is the one self-join on (band, key) that turns them
+  into distinct candidate pairs — only colliding docs meet, so shuffle
+  volume is O(n_docs × n_bands), never O(n_docs²); verification (exact
+  Jaccard, signature agreement, Hamming distance, cosine) touches the
+  candidates only.
+- The hash family decides only how signatures and band keys are built:
+  :data:`XXHASH64` (Spark's seeded xxhash64 — fastest, Spark-only, value-
+  checked against a pure-Python reference in tests) or :data:`MD5` (hex
+  slices of md5 digests — every stage replays in DuckDB, so the portable
+  queries are oracle-checked end to end). Exact dedup and Winnowing use
+  md5 digests too. Every hash has literal seeds — deterministic across
+  runs/executors, which keeps re-runs idempotent (the engine's
+  at-least-once story, SURVEY.md §2.9 D5).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # --- tokenization / shingling ----------------------------------------------
 
@@ -236,65 +247,172 @@ def winnow_fingerprints(
     )
 
 
-# --- MinHash + LSH ----------------------------------------------------------
+# --- LSH hash families ------------------------------------------------------
+
+
+def _xxhash64_mins(num_perm: int) -> tuple[dict, list, list]:
+    """Permutation p is xxhash64(shingle, p), min-aggregated directly."""
+    return (
+        {},
+        [F.min(F.xxhash64(F.col("shingle"), F.lit(p))).alias(f"h{p}") for p in range(num_perm)],
+        [F.col(f"h{p}") for p in range(num_perm)],
+    )
+
+
+def _md5_mins(num_perm: int) -> tuple[dict, list, list]:
+    """Permutation p = 4b + r is the exact 32-bit int64 read from hex
+    chars [8r+1, 8r+8] of ``_db = md5(f"{b}:" || shingle)`` ('0x'||hex →
+    BIGINT in DuckDB ≡ conv(hex,16,10) here — the proven cross-engine
+    recipe). One md5 digest yields FOUR independent permutation hashes
+    (disjoint digest bits), so 16 perms cost 4 md5 evaluations per
+    shingle instead of 16 — and at 100 TB the per-token hash cost IS the
+    cost of MinHash. The digests are projected ONCE per shingle row; the
+    aggregates MIN the raw 8-hex slices as strings (fixed-width
+    lowercase hex sorts lexicographically ≡ numerically) and the
+    post-projection converts the surviving strings per GROUP to int64 —
+    hex→int per shingle ROW inside the aggregate was measured 1.6×
+    slower at sf0.1 (2.81 s vs 1.72 s for the signature stage).
+
+    Why not Kirsch–Mitzenmacher (h1 + p·h2 from 2 md5 calls)? KM is
+    sound for Bloom filters but WRONG for MinHash: argmin_s(h1 + p·h2)
+    can only move monotonically from the min-h1 element (p=0) to the
+    min-h2 element (p→∞), so the num_perm signature components are
+    near-perfectly correlated — measured agreement on near-identical
+    shingle sets collapsed to 0/16 where Jaccard predicts ~11/16
+    (caught by test_group_signature_agreement_tracks_overlap). Disjoint
+    digest bits are genuinely independent across p. 32-bit mins: within
+    a document's ~10²-shingle set the collision odds are ~10⁴/2³³ —
+    immaterial, and identical in both engines either way."""
+    digests = {
+        f"_d{b}": F.md5(F.concat(F.lit(f"{b}:"), F.col("shingle")))
+        for b in range((num_perm + 3) // 4)
+    }
+    aggs, post = [], []
+    for p in range(num_perm):
+        b, r = divmod(p, 4)
+        aggs.append(F.min(F.substring(F.col(f"_d{b}"), 8 * r + 1, 8)).alias(f"_s{p}"))
+        post.append(F.conv(F.col(f"_s{p}"), 16, 10).cast("long").alias(f"h{p}"))
+    return digests, aggs, post
+
+
+def _xxhash64_token_bits(tok) -> list:
+    """The 64 bits of xxhash64(token)."""
+    h = F.xxhash64(tok)
+    return [F.shiftright(h, i).bitwiseAND(F.lit(1)) for i in range(64)]
+
+
+def _md5_token_bits(tok) -> list:
+    """32 bits from the first 8 hex chars of md5(token): bit b is bit
+    (b mod 4) of nibble (b div 4), by hex-char position arithmetic any
+    engine reproduces."""
+    hx = F.substring(F.md5(tok), 1, 8)
+    nib = [
+        F.instr(F.lit("0123456789abcdef"), F.substring(hx, j + 1, 1)) - 1
+        for j in range(8)
+    ]
+    return [F.shiftright(nib[b // 4], b % 4).bitwiseAND(F.lit(1)) for b in range(32)]
+
+
+class HashFamily(NamedTuple):
+    """How one LSH hash family builds signatures and band keys; every
+    other stage of the near-dup pipeline is shared."""
+
+    #: num_perm -> (per-shingle digest columns, per-permutation min
+    #: aggregates, post-projection to the int64 columns h0..h{num_perm-1})
+    minhash_mins: Callable[[int], tuple[dict, list, list]]
+    #: (band index, that band's signature columns) -> band key column
+    band_key: Callable[[int, list], Column]
+    #: token column -> the SimHash bit columns (0/1) of its hash
+    token_bits: Callable[[Column], list]
+    #: how many bits token_bits yields (the SimHash signature width)
+    simhash_bits: int
+
+
+#: Spark's seeded xxhash64 — the fastest family, but no other engine
+#: computes it, so its queries are checked against the pure-Python
+#: reference in tests/xxh64.py rather than a SQL oracle.
+XXHASH64 = HashFamily(
+    _xxhash64_mins,
+    lambda b, hs: F.xxhash64(F.lit(b), F.concat_ws(",", *hs)),
+    _xxhash64_token_bits,
+    64,
+)
+#: md5-derived hashes — every stage replays in any engine with md5, so
+#: the portable queries are oracle-checked end to end.
+MD5 = HashFamily(_md5_mins, lambda b, hs: F.concat_ws("|", *hs), _md5_token_bits, 32)
+
+
+# --- LSH pipeline: signatures → band keys → candidate pairs → verify --------
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_perm: int = 32
+    shingled: DataFrame, keys: list[str], num_perm: int = 32, family: HashFamily = XXHASH64
 ) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of xxhash64(shingle, i)
-    for each of ``num_perm`` seeded permutations.
+    """(keys, h0..h{num_perm-1}) int64 MinHash signature per key group:
+    the min over the group's ``shingle`` rows of each permutation hash.
+    One groupBy pass computes every min, so the signature table is
+    narrow (num_perm longs per group) no matter how large the corpus.
 
-    One explode + one groupBy(id) — the signature table is narrow
-    (id + num_perm longs) no matter how large the corpus.
-    """
-    shingled = exploded_shingles(df, text_col, id_col)
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(num_perm)
+    Because min is a mergeable, order-independent aggregate, the same
+    expression runs as a streaming stateful aggregation
+    (streaming/sketches.streaming_minhash_signatures) with state
+    bit-identical to a batch build over the same rows."""
+    digests, aggs, post = family.minhash_mins(num_perm)
+    return shingled.withColumns(digests).groupBy(*keys).agg(*aggs).select(*keys, *post)
+
+
+def minhash_bands(
+    sigs: DataFrame, id_col: str, num_perm: int, rows_per_band: int, family: HashFamily
+) -> DataFrame:
+    """(id, band, key) rows: the signature cut into num_perm //
+    rows_per_band bands of consecutive components, one key per band."""
+    keys = [
+        family.band_key(b, [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
+        for b in range(num_perm // rows_per_band)
     ]
-    agg = shingled.groupBy(id_col).agg(*mins)
-    return agg.select(F.col(id_col), F.array(*[f"h{i}" for i in range(num_perm)]).alias("signature"))
+    return sigs.select(F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "key"))
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, id_col: str = "doc_id", rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs that collide in ≥1 band.
+def band_join(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The ONE banded-LSH candidate stage: distinct (id_a < id_b) pairs
+    of rows that share a (band, key) — OR-amplification, two items are
+    candidates if ANY band agrees. Every other column of ``bands`` (a
+    per-item payload such as the SimHash signature) rides along as
+    ``<col>_a`` / ``<col>_b``.
 
-    banding: signature[num_perm] → num_perm/rows_per_band bands; bucket key =
-    xxhash64(band_idx, band slice). Self-join on the bucket key — the join is
-    an equi-join Catalyst shuffles on (band_idx, bucket), so only genuinely
-    colliding docs ever meet. Output is distinct (id_a < id_b) pairs.
+    The self-join is an equi-join on (band, key), so only colliding items
+    ever meet: the shuffle is O(n·bands) band rows, never O(n²). A pair
+    colliding in k bands appears k times, hence the distinct.
+
+    The pairs are hash-partitioned by ``id_a`` at an explicit width, the
+    session's shuffle partitions. Consumers' verify steps (the cosine
+    reranks' 64-element folds above all) are compute-bound over
+    byte-light pair rows, which AQE's byte-based coalescing would shrink
+    to one task (measured 10.9 s single-task for the cosine rerank at
+    sf0.1); an explicit-N repartition is exempt from coalescing. When the
+    join already streams a side hash-partitioned by id at that width (a
+    signature aggregate keyed by id), EnsureRequirements drops the
+    repartition as redundant; otherwise it takes the place of the
+    exchange the distinct would need anyway. Either way the pin costs no
+    extra shuffle.
     """
-    n_bands = F.floor(F.size("signature") / rows_per_band).cast("int")
-    # guard the band index sequence: for a signature SHORTER than one band
-    # (n_bands = 0), sequence(0, -1) yields the DESCENDING [0, -1] (the
-    # module-docstring trap) and band -1 would slice from the END —
-    # emitting bogus buckets for a banding that was never requested
-    band_idx = F.when(n_bands >= 1, F.sequence(F.lit(0), n_bands - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bands = sig_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                band_idx,
-                lambda b: F.xxhash64(
-                    b, F.concat_ws(",", F.slice("signature", b * rows_per_band + 1, rows_per_band))
-                ),
-            )
-        ).alias("band_idx", "bucket"),
-    )
+    payload = [c for c in bands.columns if c not in (id_col, "band", "key")]
     a = bands.alias("a")
     b = bands.alias("b")
     return (
         a.join(
             b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in payload],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in payload],
+        )
+        .repartition(int(bands.sparkSession.conf.get("spark.sql.shuffle.partitions")), "id_a")
         .distinct()
     )
 
@@ -326,6 +444,28 @@ def jaccard_pairs(
     )
 
 
+def minhash_candidates(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = 32,
+    rows_per_band: int = 4,
+    family: HashFamily = XXHASH64,
+) -> tuple[DataFrame, DataFrame]:
+    """The banded CANDIDATE stage of MinHash-LSH, exposed separately so
+    callers can audit the raw candidate set (the LSH recall/precision
+    evaluation in queries/llm50) instead of only the verified pairs.
+    Returns (candidate pairs, persisted shingle frame) — the shingle
+    table feeds the signatures AND both verify sides, so it is persisted
+    (3× faster than recomputation, measured at sf0.1); exploding the
+    CACHED array is safe (the inferred size() filter can't substitute
+    past the InMemoryRelation boundary)."""
+    sh_raw = with_shingles(df, text_col, id_col).persist()
+    shingled = sh_raw.select(F.col(id_col), F.explode("sh").alias("shingle"))
+    sigs = minhash_signatures(shingled, [id_col], num_perm, family)
+    return band_join(minhash_bands(sigs, id_col, num_perm, rows_per_band, family), id_col), sh_raw
+
+
 def minhash_neardup(
     df: DataFrame,
     text_col: str = "text",
@@ -334,16 +474,19 @@ def minhash_neardup(
     rows_per_band: int = 4,
     threshold: float = 0.5,
     persist_mode: str = "shingles",
+    family: HashFamily = XXHASH64,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signatures → band candidates →
-    exact-Jaccard verification ≥ threshold.
+    """MinHash-LSH near-dup: signatures → band candidates → exact-Jaccard
+    verification ≥ threshold. With ``family=MD5`` (16 perms) any engine
+    with md5 reproduces the signatures, candidates and verified pairs
+    (minhash_portable_neardup); XXHASH64 is faster (2.55 s vs 3.59 s at
+    sf0.1, interleaved A/B) but Spark-only.
 
     ``persist_mode`` is the memory/recompute knob; both modes return
     identical pairs (tested):
 
     - ``"shingles"`` (default, right at test scale): the wide shingle
-      table feeds three consumers (signatures + both verify sides), so it
-      is persisted — 3× faster than recomputation, measured at sf0.1.
+      table is persisted (see :func:`minhash_candidates`).
     - ``"signatures"`` (the 100 TB mode): persist only the NARROW
       signature table (num_perm longs per doc — fits executor memory at
       any corpus size the cluster can hold at all), and rebuild shingles
@@ -352,361 +495,27 @@ def minhash_neardup(
       shingle table never materializes corpus-wide; the recompute cost is
       proportional to the (small) candidate set.
     """
-    sh_raw = with_shingles(df, text_col, id_col)
     if persist_mode == "shingles":
-        sh_raw = sh_raw.persist()
-        # exploding the CACHED array is safe (the inferred size() filter
-        # can't substitute past the InMemoryRelation boundary)
-        shingled = sh_raw.select(F.col(id_col), F.explode("sh").alias("shingle"))
+        cands, verify_sh = minhash_candidates(
+            df, text_col, id_col, num_perm, rows_per_band, family
+        )
     elif persist_mode == "signatures":
         # unpersisted: keep the shingle expr inside Generate (see
         # exploded_shingles) or the whole pipeline is computed twice
-        shingled = exploded_shingles(df, text_col, id_col)
-    else:
-        raise ValueError(f"unknown persist_mode {persist_mode!r}")
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}") for i in range(num_perm)
-    ]
-    sigs = shingled.groupBy(id_col).agg(*mins).select(
-        F.col(id_col), F.array(*[f"h{i}" for i in range(num_perm)]).alias("signature")
-    )
-    if persist_mode == "signatures":
-        sigs = sigs.persist()
-    cands = lsh_candidate_pairs(sigs, id_col, rows_per_band)
-    verify_sh = sh_raw
-    if persist_mode == "signatures":
+        sigs = minhash_signatures(
+            exploded_shingles(df, text_col, id_col), [id_col], num_perm, family
+        ).persist()
+        cands = band_join(minhash_bands(sigs, id_col, num_perm, rows_per_band, family), id_col)
         cand_ids = (
             cands.select(F.col("id_a").alias(id_col))
             .union(cands.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        verify_sh = sh_raw.join(cand_ids, id_col, "left_semi")
+        verify_sh = with_shingles(df, text_col, id_col).join(cand_ids, id_col, "left_semi")
+    else:
+        raise ValueError(f"unknown persist_mode {persist_mode!r}")
     return jaccard_pairs(df, cands, text_col, id_col, shingle_df=verify_sh).filter(
         F.col("jaccard") >= threshold
-    )
-
-
-def minhash_md5_digests(shingle_col="shingle", num_perm: int = 16) -> dict:
-    """Digest columns ``_d0.._d{ceil(num_perm/4)-1}`` for the engine-
-    portable MinHash family: ``_db = md5(f"{b}:" || shingle)``, and
-    permutation p = 4b + r takes hex chars [8r+1, 8r+8] of ``_db`` as an
-    exact 32-bit int64 ('0x'||hex → BIGINT in DuckDB ≡ conv(hex,16,10)
-    here — the proven cross-engine recipe). One md5 digest yields FOUR
-    independent permutation hashes (disjoint digest bits), so 16 perms
-    cost 4 md5 evaluations per shingle instead of 16 — and at 100 TB
-    the per-token hash cost IS the cost of MinHash.
-
-    Why not Kirsch–Mitzenmacher (h1 + p·h2 from 2 md5 calls)? KM is
-    sound for Bloom filters but WRONG for MinHash: argmin_s(h1 + p·h2)
-    can only move monotonically from the min-h1 element (p=0) to the
-    min-h2 element (p→∞), so the num_perm signature components are
-    near-perfectly correlated — measured agreement on near-identical
-    shingle sets collapsed to 0/16 where Jaccard predicts ~11/16
-    (caught by test_group_signature_agreement_tracks_overlap). Disjoint
-    digest bits are genuinely independent across p. 32-bit mins: within
-    a document's ~10²-shingle set the collision odds are ~10⁴/2³³ —
-    immaterial, and identical in both engines either way."""
-    col = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    n_digests = (num_perm + 3) // 4
-    return {
-        f"_d{b}": F.md5(F.concat(F.lit(f"{b}:"), col)) for b in range(n_digests)
-    }
-
-
-def _minhash_md5_mins(num_perm: int) -> tuple[list, list]:
-    """(aggregates, post-projection) for the signature build over rows
-    carrying the ``_db`` digest columns (project them ONCE with
-    minhash_md5_digests — each md5 call amortizes over four
-    permutations). The aggregates MIN the raw 8-hex slices as strings —
-    fixed-width lowercase hex sorts lexicographically ≡ numerically —
-    and the post-projection converts the num_perm surviving strings per
-    GROUP to int64; hex→int conversion per shingle ROW inside the
-    aggregate was measured 1.6× slower at sf0.1 (2.81 s vs 1.72 s for
-    the signature stage)."""
-    aggs, post = [], []
-    for p in range(num_perm):
-        b, r = divmod(p, 4)
-        aggs.append(
-            F.min(F.substring(F.col(f"_d{b}"), 8 * r + 1, 8)).alias(f"_s{p}")
-        )
-        post.append(F.conv(F.col(f"_s{p}"), 16, 10).cast("long").alias(f"h{p}"))
-    return aggs, post
-
-
-def minhash_group_signatures(
-    df: DataFrame,
-    group_cols: list[str],
-    text_col: str = "text",
-    num_perm: int = 16,
-) -> DataFrame:
-    """Merged MinHash signature PER GROUP (h0..h{num_perm-1} columns):
-    the min over every shingle of every document in the group — the
-    group-level shingle-set sketch (estimate cross-source containment/
-    Jaccard from signature agreement without touching row data).
-
-    Because min is a mergeable, order-independent aggregate, this same
-    expression runs as a STREAMING stateful aggregation
-    (streaming/sketches.streaming_minhash_signatures) with state
-    guaranteed bit-identical to the batch-built sketch — and mergeable
-    with one across pipelines.
-
-    SKETCH FORMAT v2 (round 5): h0..h{p-1} changed from 16-hex STRINGS
-    (min over hex digests) to INT64 (conv base-16 min applied after the
-    string min — same ordering, fixed-width hex is order-isomorphic to
-    its integer value). Any streaming checkpoint or persisted sketch
-    written by the v1 string-typed aggregates is schema-incompatible:
-    REBUILD such state from source rather than restoring/merging — a
-    restore fails on the aggregate expression change, and a hand-merged
-    v1 string MIN against v2 int64 MIN would silently mismatch.
-    """
-    toks = df.select(*group_cols, tokens_col(text_col).alias("_toks"))
-    sh = toks.select(
-        *group_cols, F.explode(shingles_from_tokens("_toks")).alias("shingle")
-    )
-    sh = sh.withColumns(minhash_md5_digests(num_perm=num_perm))
-    aggs, post = _minhash_md5_mins(num_perm)
-    return sh.groupBy(*group_cols).agg(*aggs).select(*group_cols, *post)
-
-
-def _md5_band_pairs(
-    sigs: DataFrame, num_perm: int, rows_per_band: int, id_col: str
-) -> DataFrame:
-    """Banded LSH candidate pairs from an (id, h0..h{p-1}) signature
-    frame: concat each band's rows into a bucket key, self-join on
-    (band_idx, band_key) with the id_a < id_b tie-break, distinct. The
-    ONE copy of the band-key contract every md5-family pipeline shares —
-    the oracles pin this exact candidate set, so it must never fork
-    between the verified and estimated variants."""
-    n_bands = num_perm // rows_per_band
-    bands = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        *[f"h{b * rows_per_band + r}" for r in range(rows_per_band)],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def minhash_md5_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    rows_per_band: int = 4,
-) -> tuple[DataFrame, DataFrame]:
-    """The banded CANDIDATE stage of the md5 MinHash pipeline, exposed
-    separately so callers can audit the raw candidate set (the LSH
-    recall/precision evaluation in queries/llm50) instead of only the
-    verified pairs. Returns (candidate pairs, persisted shingle frame) —
-    reuse the latter for verification to avoid recomputing shingles."""
-    sh_raw = with_shingles(df, text_col, id_col).persist()
-    shingled = sh_raw.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    shingled = shingled.withColumns(minhash_md5_digests(num_perm=num_perm))
-    aggs, post = _minhash_md5_mins(num_perm)
-    sigs = shingled.groupBy(id_col).agg(*aggs).select(id_col, *post)
-    return _md5_band_pairs(sigs, num_perm, rows_per_band, id_col), sh_raw
-
-
-def minhash_md5_neardup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """ENGINE-PORTABLE MinHash-LSH near-dup: identical pipeline shape to
-    ``minhash_neardup`` (signatures -> bands -> exact-Jaccard verify) but
-    the hash family is md5-derived — permutation p = 4b + r takes an
-    exact 32-bit slice of md5(f"{b}:" || shingle)
-    (``minhash_md5_digests``), minimized numerically in int64 — so ANY
-    engine with md5 reproduces the exact same signatures, candidates,
-    and verified pairs (xxhash64 exists only in Spark, which is why
-    minhash_neardup is rows-only). The trade: num_perm/4 md5 calls per
-    shingle still cost more than xxhash64 — use this variant when
-    cross-engine reproducibility of the candidate set matters (dataset
-    versioning, audited dedup), the xxhash one when raw throughput
-    does.
-
-    Scale shape is unchanged: one shingle-keyed aggregation for
-    signatures (num_perm mins in a single groupBy pass), banded bucket
-    equi-join (never all-pairs), candidate-only verification.
-    """
-    cands, sh_raw = minhash_md5_candidates(df, text_col, id_col, num_perm, rows_per_band)
-    return jaccard_pairs(df, cands, text_col, id_col, shingle_df=sh_raw).filter(
-        F.col("jaccard") >= threshold
-    )
-
-
-def simhash_md5_neardup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """ENGINE-PORTABLE SimHash near-dup: 32-bit signatures whose bits come
-    from md5 nibbles (hex-char position arithmetic — reproducible on any
-    engine, unlike xxhash64's bit mix in ``simhash_signatures``), blocked
-    by the four 8-bit signature bytes (pigeonhole: hamming ≤ 3 pairs agree
-    on ≥ 1 of 4 blocks), verified by exact ``bit_count(a XOR b)``.
-
-    Per token: h = first 8 hex chars of md5(token); bit b of the token
-    hash = bit (b mod 4) of nibble (b div 4). Per doc and bit: sum ±1
-    across tokens, sign → signature bit (ties → 0, deterministic).
-
-    Scale: one token explode → 32 conditional sums in ONE groupBy pass →
-    4-row block explode → (block_idx, block_val) equi-join — shuffle
-    O(n·4), never all-pairs; the verify is integer bit arithmetic.
-    """
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-    hx = F.substring(F.md5(F.col("tok")), 1, 8)
-    nib = [
-        F.instr(F.lit("0123456789abcdef"), F.substring(hx, j + 1, 1)) - 1
-        for j in range(8)
-    ]
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftright(nib[b // 4], b % 4).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(32)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    sig = None
-    for b in range(32):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, b)
-        sig = term if sig is None else sig.bitwiseXOR(term)  # disjoint bits
-    sigs = agg.select(F.col(id_col), sig.alias("simhash"))
-    blocks = sigs.select(
-        F.col(id_col),
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), 8 * m).bitwiseAND(F.lit(255))
-                    for m in range(4)
-                ]
-            )
-        ).alias("block_idx", "block_val"),
-    )
-    a = blocks.alias("a")
-    b2 = blocks.alias("b")
-    pairs = (
-        a.join(
-            b2,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("long")
-    return (
-        pairs.select("id_a", "id_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# --- SimHash ----------------------------------------------------------------
-
-
-def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over token xxhash64s.
-
-    For each bit position, sum +1/-1 across token hashes; bit = sign.
-    64 conditional-sum aggregates in ONE groupBy pass (no per-bit shuffles).
-    """
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-    h = F.xxhash64(F.col("tok"))
-    bit_sums = [
-        F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    sim = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        sim = term if sim is None else sim.bitwiseXOR(term)  # disjoint bits: XOR == OR == +
-    return agg.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_neardup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
-
-    Blocking: split the 64-bit hash into 4 × 16-bit chunks; any pair with
-    Hamming ≤ 3 agrees exactly on ≥ 1 chunk (pigeonhole), so candidates are
-    an equi-join on (chunk_idx, chunk_value) — never a cross join.
-    """
-    sigs = simhash_signatures(df, text_col, id_col)
-    chunks = sigs.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), 16 * c).bitwiseAND(F.lit(0xFFFF))
-                    for c in range(4)
-                ]
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cands.select("id_a", "id_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
     )
 
 
@@ -717,6 +526,7 @@ def minhash_estimate_neardup(
     num_perm: int = 32,
     rows_per_band: int = 4,
     threshold: float = 0.5,
+    family: HashFamily = XXHASH64,
 ) -> DataFrame:
     """MinHash near-dup with SIGNATURE-AGREEMENT Jaccard estimation — the
     verify-free scale variant of ``minhash_neardup``.
@@ -729,17 +539,22 @@ def minhash_estimate_neardup(
     narrow signatures (num_perm longs each) — at 100 TB the shingle table
     is never materialized a second time, and the verify step is a zip_with
     over 2×num_perm longs per pair instead of set-intersection over
-    hundreds of shingles per pair.
+    hundreds of shingles per pair. With ``family=MD5`` and 16 perms the
+    ESTIMATE itself replays in SQL: agree/16 is an exact power-of-two
+    division, so even the threshold comparison is engine-exact.
 
     Use when the threshold decision tolerates the estimator's variance
     (typical for >=0.7 dedup gates); keep exact ``minhash_neardup`` when
     precision at the boundary matters. Estimator-vs-exact error is
     asserted in tests/test_llmops.py.
     """
-    sigs = minhash_signatures(df, text_col, id_col, num_perm).persist()
-    cands = lsh_candidate_pairs(sigs, id_col, rows_per_band)
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
+    sigs = minhash_signatures(
+        exploded_shingles(df, text_col, id_col), [id_col], num_perm, family
+    ).persist()
+    cands = band_join(minhash_bands(sigs, id_col, num_perm, rows_per_band, family), id_col)
+    sig = F.array(*[f"h{p}" for p in range(num_perm)])
+    a = sigs.select(F.col(id_col).alias("id_a"), sig.alias("sig_a"))
+    b = sigs.select(F.col(id_col).alias("id_b"), sig.alias("sig_b"))
     agree = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
     )
@@ -755,47 +570,59 @@ def minhash_estimate_neardup(
     )
 
 
-def minhash_md5_estimate_neardup(
+def simhash_signatures(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", family: HashFamily = XXHASH64
+) -> DataFrame:
+    """(id, simhash) over the family's token-hash bits — 64 for
+    XXHASH64, 32 for MD5. For each bit position, sum +1/-1 across the
+    doc's tokens; bit = sign (ties → 0, deterministic). All bits are
+    conditional sums in ONE groupBy pass (no per-bit shuffles)."""
+    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
+    bits = family.token_bits(F.col("tok"))
+    bit_sums = [
+        F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"b{i}") for i, bit in enumerate(bits)
+    ]
+    agg = toks.groupBy(id_col).agg(*bit_sums)
+    sim = None
+    for i in range(family.simhash_bits):
+        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
+        term = F.shiftleft(bit, i)
+        sim = term if sim is None else sim.bitwiseXOR(term)  # disjoint bits: XOR == OR == +
+    return agg.select(F.col(id_col), sim.alias("simhash"))
+
+
+def simhash_neardup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 16,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
+    max_hamming: int = 3,
+    family: HashFamily = XXHASH64,
 ) -> DataFrame:
-    """ENGINE-PORTABLE signature-agreement MinHash near-dup: the
-    verify-free estimator of ``minhash_estimate_neardup`` over the
-    md5-derived hash family of ``minhash_md5_neardup`` — every stage
-    (signatures, bands, candidates, the agreement count) replays in any
-    engine with md5, so the ESTIMATE itself is hash-verifiable, not just
-    the pipeline shape. jaccard_est = agreeing components / num_perm is
-    an exact power-of-two-denominator division (num_perm = 16), so the
-    threshold comparison is engine-exact too.
+    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
-    Scale shape is the estimate variant's: one shingle-keyed groupBy for
-    signatures, banded bucket equi-join, and a candidate join carrying
-    only 2×num_perm int64 components per pair — the shingle table is never
-    materialized a second time."""
-    shingled = exploded_shingles(df, text_col, id_col)
-    shingled = shingled.withColumns(minhash_md5_digests(num_perm=num_perm))
-    aggs, post = _minhash_md5_mins(num_perm)
-    sigs = shingled.groupBy(id_col).agg(*aggs).select(id_col, *post).persist()
-    cands = _md5_band_pairs(sigs, num_perm, rows_per_band, id_col)
-    sig_arr = F.array(*[f"h{p}" for p in range(num_perm)])
-    a = sigs.select(F.col(id_col).alias("id_a"), sig_arr.alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), sig_arr.alias("sig_b"))
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
+    Blocking: split the signature into 4 equal chunks (16 bits for
+    XXHASH64, 8 for MD5); any pair with Hamming ≤ 3 agrees exactly on
+    ≥ 1 chunk (pigeonhole), so the chunks are the band keys of
+    :func:`band_join` — never a cross join. Verify is exact
+    ``bit_count(a XOR b)``, integer bit arithmetic.
+    """
+    sigs = simhash_signatures(df, text_col, id_col, family)
+    width = family.simhash_bits // 4
+    chunks = sigs.select(
+        F.col(id_col),
+        F.col("simhash").alias("sh"),
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftright(F.col("simhash"), width * c).bitwiseAND(F.lit((1 << width) - 1))
+                    for c in range(4)
+                ]
+            )
+        ).alias("band", "key"),
     )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (agree.cast("double") / F.lit(num_perm)).alias("jaccard_est"),
-        )
-        .filter(F.col("jaccard_est") >= threshold)
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return band_join(chunks, id_col).select("id_a", "id_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 

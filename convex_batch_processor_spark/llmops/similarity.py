@@ -11,6 +11,13 @@ the 100 TB cost is one shuffle on bucket id, never a cross join. (IVF via
 k-means coarse quantizer is the other standard route; LSH chosen here
 because it is pure Column math — no iterative training job.)
 
+Cosine near-dup is the hyperplane family of the shared LSH pipeline in
+dedup.py: per-band bucket ids are the band keys, :func:`dedup.band_join`
+produces the distinct candidate pairs, and an exact cosine rerank is the
+verify step. The two variants differ only in how the band keys are built
+(one Arrow matmul over 24×4 planes vs 4×4 literal-plane Column folds)
+and in their rerank arithmetic (unit-vector dot vs dot/(na·nb)).
+
 All dot products run as exact double arithmetic (float×float → double is
 exact), sequential fold per array — deterministic across partitions.
 """
@@ -21,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import band_join
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -131,7 +140,7 @@ def cosine_neardup_pairs(
 ) -> DataFrame:
     """All pairs above a cosine threshold (exact; for bounded corpora).
 
-    At 100 TB use ``hyperplane_lsh_buckets`` + per-bucket pairing instead —
+    At 100 TB use ``cosine_neardup_pairs_bucketed`` (banded LSH) instead —
     this exact form exists as the verification/oracle baseline.
     """
     a = embeddings.select(F.col(id_col).alias("vec_id_a"), F.col(vec_col).alias("va"))
@@ -158,21 +167,21 @@ def banded_lsh_signatures(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, band, bucket) rows: ``n_bands`` independent sign-bit bucketings
-    (OR-amplification, same shape as MinHash banding — two vectors are
-    candidates if ANY band agrees).
+    """(id, band, key) rows for :func:`dedup.band_join`: ``n_bands``
+    independent sign-bit bucketings, the key being the band's bucket id
+    (the hyperplane hash family of the shared LSH pipeline).
 
     All ``n_bands × bits_per_band`` hyperplane projections run as ONE
     numpy matmul per Arrow batch inside a vectorized pandas_udf. The pure
     Column-math alternative (one F.aggregate fold per plane, as in
-    ``hyperplane_lsh_buckets``) is the right call for a handful of planes
+    :func:`hyperplane_bucket`) is the right call for a handful of planes
     but generates a ~50k-node expression tree at 96 planes — Catalyst +
     codegen spend >10 s compiling it per action, dwarfing the actual work.
     The UDF is map-only (no shuffle), Arrow-batched, and the plane matrix
     is baked into the closure by value, so it scales exactly like the
     Column form at 100 TB.
 
-    Rows carry only (id, band, bucket) — never the vector — so the explode
+    Rows carry only (id, band, key) — never the vector — so the explode
     multiplies tiny rows, not 64-float payloads; callers re-join vectors
     for candidates only.
     """
@@ -205,7 +214,7 @@ def banded_lsh_signatures(
 
     return embeddings.select(
         F.col(id_col),
-        F.posexplode(band_buckets(F.col(vec_col))).alias("band", "bucket"),
+        F.posexplode(band_buckets(F.col(vec_col))).alias("band", "key"),
     )
 
 
@@ -224,11 +233,9 @@ def cosine_neardup_pairs_bucketed(
     embedding twin of MinHash-band → verify-Jaccard).
 
     Plan shape (the 100 TB contract):
-      1. one scan → (id, band, bucket) signatures (no vectors)
-      2. equi-join on (band, bucket) with ``id_a < id_b`` → candidate id
-         pairs; shuffle is O(n·bands) signature rows, never O(n²)
-      3. dropDuplicates on the id pair (a pair colliding in k bands
-         appears k times)
+      1. one scan → (id, band, key) signatures (no vectors)
+      2-3. :func:`dedup.band_join` → distinct candidate id pairs; shuffle
+         is O(n·bands) signature rows, never O(n²)
       4. join vectors back by id for the DEDUPED candidates only, compute
          exact cosine, keep > threshold — precision is exactly 1.0 vs the
          all-pairs baseline; recall is the banding OR-amplification curve
@@ -249,24 +256,10 @@ def cosine_neardup_pairs_bucketed(
     sig = banded_lsh_signatures(
         embeddings, n_bands, bits_per_band, dim, seed, id_col, vec_col
     ).persist()
-    a = sig.select(F.col(id_col).alias("vec_id_a"), "band", "bucket")
-    b = sig.select(F.col(id_col).alias("vec_id_b"), "band", "bucket")
-    # The rerank below is COMPUTE-bound (a 64-element interpreted fold per
-    # pair) over byte-light rows, so AQE's byte-based coalescing would
-    # shrink this exchange to one task and serialize the fold (measured
-    # 10.9 s single-task at sf0.1). Pin the pair exchange at a
-    # cores-derived width instead: explicit-N repartition is exempt from
-    # AQE coalescing, dropDuplicates on the same keys reuses the exchange
-    # (no extra shuffle), and the pair key is unique so the hash spread is
-    # uniform. defaultParallelism scales with the cluster, not this host.
-    _p = embeddings.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select("vec_id_a", "vec_id_b")
-        .repartition(_p, "vec_id_a", "vec_id_b")
-        .dropDuplicates(["vec_id_a", "vec_id_b"])
-    )
+    # band_join pins the candidate exchange at the session's shuffle
+    # width, so the compute-bound rerank below (a 64-element interpreted
+    # fold per pair) keeps its task spread
+    cand = band_join(sig, id_col).toDF("vec_id_a", "vec_id_b")
     # Rerank: normalize each vector ONCE (n rows pay the two norm folds),
     # so per-candidate similarity is a single 64-mult dot fold — JVM-side,
     # no Python workers. Measured at sf0.1 against alternatives: full
@@ -294,26 +287,20 @@ def cosine_neardup_pairs_bucketed(
     )
 
 
-def hyperplane_lsh_buckets(
-    embeddings: DataFrame,
-    n_bits: int = 12,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket id = sign-bit string of ``n_bits``
-    fixed hyperplane dot products. Deterministic (seeded literals baked into
-    the plan); pure Column math → whole-stage codegen."""
-    planes = _hyperplanes(n_bits, dim, seed)
+def hyperplane_bucket(vec: Column, n_bits: int, dim: int, seed: int) -> Column:
+    """Random-hyperplane LSH bucket id: the sign-bit string of ``n_bits``
+    fixed hyperplane dot products, each a JVM sequential fold over
+    literal planes — bit-identical to DuckDB's list_dot_product over the
+    same literals. Deterministic (seeded literals baked into the plan);
+    pure Column math."""
     bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
+    for i, p in enumerate(_hyperplanes(n_bits, dim, seed)):
         plane_col = F.array(*[F.lit(float(w)) for w in p])
-        bit = F.when(dot_col(F.col(vec_col), plane_col) > 0, F.lit(1).cast("long")).otherwise(
+        bit = F.when(dot_col(vec, plane_col) > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         bucket = bucket.bitwiseXOR(F.shiftleft(bit, i))
-    return embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
+    return bucket
 
 
 def lsh_ann(
@@ -336,7 +323,8 @@ def lsh_ann(
     the join stays an equi-join on bucket id. Recall/cost tune via n_bits
     (fewer bits → bigger buckets) and multiprobe radius.
     """
-    bucketed = hyperplane_lsh_buckets(embeddings, n_bits, dim, seed, id_col, vec_col)
+    bucket = hyperplane_bucket(F.col(vec_col), n_bits, dim, seed)
+    bucketed = embeddings.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
     q = bucketed.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("q_vec_id"), F.col(vec_col).alias("q_vec"), "bucket"
     )
@@ -561,10 +549,9 @@ def cosine_neardup_pairs_portable(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Banded hyperplane-LSH cosine near-dup pairs, ENGINE-PORTABLE
-    verification variant: per-band literal hyperplanes (seed + band)
-    evaluated as JVM sequential folds — bit-identical to DuckDB's
-    list_dot_product over the same plane literals — bucket equi-join
-    candidates, exact 6-dp cosine rerank > threshold.
+    verification variant: per-band literal hyperplanes (seed + band,
+    :func:`hyperplane_bucket`) as the band keys of :func:`dedup.band_join`,
+    exact 6-dp cosine rerank > threshold.
 
     The PRODUCTION path is cosine_neardup_pairs_bucketed (24×4 planes in
     one Arrow matmul; 96 Column folds would blow up codegen). This keeps
@@ -574,31 +561,14 @@ def cosine_neardup_pairs_portable(
     reranked exactly) and the candidate plan is the same O(n·bands)
     equi-join as production. Backs cosine_lsh_portable_neardup and
     semantic_dedup(portable=True)."""
-    sigs = []
-    for band in range(n_bands):
-        s = hyperplane_lsh_buckets(
-            embeddings, n_bits=bits_per_band, dim=dim, seed=seed + band,
-            id_col=id_col, vec_col=vec_col,
-        ).select(F.col(id_col), F.lit(band).alias("band"), "bucket")
-        sigs.append(s)
-    sig = sigs[0]
-    for s in sigs[1:]:
-        sig = sig.unionAll(s)
-    sig = sig.persist()  # both sides of the candidate self-join
-    a = sig.select(F.col(id_col).alias("vec_id_a"), "band", "bucket")
-    b = sig.select(F.col(id_col).alias("vec_id_b"), "band", "bucket")
-    # pin the pair exchange at a cores-derived width: the rerank fold is
-    # compute-bound over byte-light rows, which AQE's byte-based
-    # coalescing would serialize onto one task (see
-    # cosine_neardup_pairs_bucketed); dropDuplicates reuses the exchange
-    _p = embeddings.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select("vec_id_a", "vec_id_b")
-        .repartition(_p, "vec_id_a", "vec_id_b")
-        .dropDuplicates(["vec_id_a", "vec_id_b"])
-    )
+    keys = [
+        hyperplane_bucket(F.col(vec_col), bits_per_band, dim, seed + band)
+        for band in range(n_bands)
+    ]
+    sig = embeddings.select(
+        F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "key")
+    ).persist()  # both sides of the candidate self-join
+    cand = band_join(sig, id_col).toDF("vec_id_a", "vec_id_b")
     # Each vector's norm is computed ONCE here (n rows pay the sqrt fold)
     # instead of once per candidate pair: sqrt(dot(v,v)) precomputed per
     # vector feeds the SAME dot/(na*nb) expression with the same operands

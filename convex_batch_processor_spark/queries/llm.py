@@ -720,14 +720,14 @@ def minhash_estimate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact path is bounded in tests.
 
     ORACLE-CHECKED since round 5 via the md5 hash family
-    (dedup.minhash_md5_estimate_neardup): signatures, bands, candidates
-    AND the agreement estimate replay in SQL; jaccard_est = agree/16 is
-    an exact power-of-two division, so even the threshold comparison is
-    engine-exact. The xxhash64-signature variant
-    (dedup.minhash_estimate_neardup) keeps the throughput crown and its
-    estimator-error test, like minhash_neardup vs the portable twin."""
-    return D.minhash_md5_estimate_neardup(
-        _t(spark, sf_dir, "documents"), threshold=0.5
+    (dedup.minhash_estimate_neardup with family=MD5, 16 perms):
+    signatures, bands, candidates AND the agreement estimate replay in
+    SQL; jaccard_est = agree/16 is an exact power-of-two division, so
+    even the threshold comparison is engine-exact. The xxhash64 family
+    keeps the throughput crown and its estimator-error test, like
+    minhash_neardup vs the portable twin."""
+    return D.minhash_estimate_neardup(
+        _t(spark, sf_dir, "documents"), num_perm=16, threshold=0.5, family=D.MD5
     )
 
 

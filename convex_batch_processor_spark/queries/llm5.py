@@ -449,8 +449,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate detection, ORACLE-CHECKED end to end —
     the first hash-verified LSH in the registry. The hash family is
-    md5-derived (llmops/dedup.minhash_md5_neardup): permutation p = 4b+r
-    is an exact 32-bit slice of md5(f"{b}:"+shingle) — 4 md5 calls per
+    md5-derived (llmops/dedup.minhash_neardup, family=MD5): permutation
+    p = 4b+r is an exact 32-bit slice of md5(f"{b}:"+shingle) — 4 md5 calls per
     shingle cover all 16 permutations with independent digest bits —
     minimized in int64, 16 perms in 4 bands of 4, exact-Jaccard
     verification ≥ 0.5. Because
@@ -462,9 +462,9 @@ def minhash_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shingle-keyed groupBy computes all 16 mins in a single
     pass; candidates come from a (band_idx, band_key) equi-join — shuffle
     O(n·bands), never all-pairs; verification touches candidates only."""
-    from ..llmops.dedup import minhash_md5_neardup
+    from ..llmops.dedup import MD5, minhash_neardup
 
-    return minhash_md5_neardup(_t(spark, sf_dir, "documents"))
+    return minhash_neardup(_t(spark, sf_dir, "documents"), num_perm=16, family=MD5)
 
 
 # --- engine-portable SimHash ------------------------------------------------
@@ -512,18 +512,20 @@ def simhash_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs, ORACLE-CHECKED end to end: 32-bit
     signatures from md5 NIBBLES (hex-char position arithmetic any engine
     reproduces), 8-bit block pigeonhole candidates, exact
-    bit_count(XOR) ≤ 1 verification (llmops/dedup.simhash_md5_neardup —
-    32 bits discriminate less than the 64-bit variant, so the hamming
-    budget is proportionally tighter).
+    bit_count(XOR) ≤ 1 verification (llmops/dedup.simhash_neardup,
+    family=MD5 — 32 bits discriminate less than the 64-bit variant, so
+    the hamming budget is proportionally tighter).
     Companion to the 64-bit xxhash64 variant (simhash_neardup, rows-only,
     faster): use this one when the near-dup decision must replay
     identically outside Spark.
 
     Scale: one conditional-sum groupBy for all 32 bits, O(n·4) block
     shuffle, integer verify — no all-pairs stage exists."""
-    from ..llmops.dedup import simhash_md5_neardup
+    from ..llmops.dedup import MD5, simhash_neardup
 
-    return simhash_md5_neardup(_t(spark, sf_dir, "documents"), max_hamming=1)
+    pairs = simhash_neardup(_t(spark, sf_dir, "documents"), max_hamming=1, family=MD5)
+    # BIGINT, the oracle's type: bit_count yields int
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
 # --- PCA top component (power iteration) ------------------------------------

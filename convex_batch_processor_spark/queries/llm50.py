@@ -115,7 +115,7 @@ def neardup_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same cost class as the dedup pipeline it audits; run it on a
     representative sample at 100 TB, not the full corpus."""
     docs = _t(spark, sf_dir, "documents")
-    cands, sh_raw = D.minhash_md5_candidates(docs)
+    cands, sh_raw = D.minhash_candidates(docs, num_perm=16, family=D.MD5)
     truth = _truth_pairs(sh_raw).filter(F.col("j") >= _TAU)
     # tp needs NO second exact-Jaccard pass over the candidates: the truth
     # branch already scored every shared-shingle pair (a superset of every

@@ -62,7 +62,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the same inverted-index expansion as the Jaccard baseline
     (shared-shingle pairs only, never all-pairs); the 100 TB variant
-    blocks with MinHash bands exactly as minhash_md5 does — containment
+    blocks with MinHash bands exactly as minhash_neardup does — containment
     only changes the verify formula."""
     docs = _t(spark, sf_dir, "documents")
     sh_raw = D.with_shingles(docs).persist()

@@ -455,10 +455,10 @@ def minhash_candidate_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the near-dup pipeline it measures — banded
     bucket equi-join for candidates (never all-pairs), candidate-only
     verification."""
-    from ..llmops.dedup import jaccard_pairs, minhash_md5_candidates
+    from ..llmops.dedup import MD5, jaccard_pairs, minhash_candidates
 
     docs = _t(spark, sf_dir, "documents")
-    cands, sh_raw = minhash_md5_candidates(docs)
+    cands, sh_raw = minhash_candidates(docs, num_perm=16, family=MD5)
     cands = cands.persist()  # two consumers: the count + the verify join
     ver = jaccard_pairs(docs, cands, shingle_df=sh_raw).filter(
         F.col("jaccard") >= _EFF_THRESHOLD

@@ -184,18 +184,26 @@ def streaming_minhash_signatures(
     index a crawl pipeline consults as documents arrive. State is
     groups x num_perm values forever (mins only ever decrease).
 
-    Delegates to the batch builder (llmops/dedup.minhash_group_signatures)
-    — a min-aggregation is an allowed streaming stateful op, and sharing
-    the expression guarantees the streaming state is bit-identical to a
-    batch-built signature over the same rows, and MERGEABLE with one.
+    The signature build is the shared batch builder
+    (llmops/dedup.minhash_signatures, md5 family) — a min-aggregation is
+    an allowed streaming stateful op, and sharing the expression
+    guarantees the streaming state is bit-identical to a batch-built
+    signature over the same rows, and MERGEABLE with one. The same call
+    on a batch DataFrame IS the batch-built group sketch.
 
-    SKETCH FORMAT v2: h-columns are int64 since round 5 (were 16-hex
-    strings). Checkpoints written by the v1 string-typed aggregates must
-    be REBUILT, not restored — see minhash_group_signatures's format
-    note."""
-    from ..llmops.dedup import minhash_group_signatures
+    SKETCH FORMAT v2 (round 5): h0..h{p-1} changed from 16-hex STRINGS
+    (min over hex digests) to INT64 (conv base-16 min applied after the
+    string min — same ordering, fixed-width hex is order-isomorphic to
+    its integer value). Any streaming checkpoint or persisted sketch
+    written by the v1 string-typed aggregates is schema-incompatible:
+    REBUILD such state from source rather than restoring/merging — a
+    restore fails on the aggregate expression change, and a hand-merged
+    v1 string MIN against v2 int64 MIN would silently mismatch."""
+    from ..llmops.dedup import MD5, minhash_signatures, shingles_from_tokens, tokens_col
 
-    return minhash_group_signatures(stream, group_cols, text_col, num_perm)
+    toks = stream.select(*group_cols, tokens_col(text_col).alias("_toks"))
+    sh = toks.select(*group_cols, F.explode(shingles_from_tokens("_toks")).alias("shingle"))
+    return minhash_signatures(sh, group_cols, num_perm, MD5)
 
 
 QUANTILE_OUTPUT_SCHEMA = (

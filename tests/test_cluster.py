@@ -190,3 +190,22 @@ def test_kmeans_clusters_keep_vec_carries_vectors(spark, sf_dir):
     out = kmeans_clusters(emb, k=4, n_iter=1, round_dp=6, keep_vec=True)
     assert out.columns == ["vec_id", "embedding", "cluster_id", "dist2"]
     assert out.filter("embedding IS NULL").count() == 0
+
+
+def test_nearest_centroid_batch_handles_empty_and_null_batches():
+    """The Arrow-batch kernel of the k-means assignment: an EMPTY batch
+    (a filtered-out partition) must return an empty frame, not crash on
+    np.concatenate([]) behind a vacuously-true valid.all(); NULL vectors
+    keep the (lowest cluster_id, NULL dist2) contract."""
+    import pandas as pd
+
+    from convex_batch_processor_spark.llmops.cluster import nearest_centroid_batch
+
+    ids, mat = [3, 7], [[0.0, 0.0], [1.0, 1.0]]
+    empty = nearest_centroid_batch(pd.Series([], dtype=object), ids, mat)
+    assert list(empty.columns) == ["cluster_id", "dist2"]
+    assert len(empty) == 0
+    got = nearest_centroid_batch(pd.Series([[0.9, 1.0], None], dtype=object), ids, mat)
+    assert got["cluster_id"].tolist() == [7, 3]
+    assert abs(got["dist2"][0] - 0.01) < 1e-12
+    assert got["dist2"][1] is None

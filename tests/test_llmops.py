@@ -18,9 +18,9 @@ def test_minhash_lsh_finds_exact_jaccard_pairs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {
         (r.id_a, r.id_b)
-        for r in D.jaccard_pairs(
-            docs, D.lsh_candidate_pairs(D.minhash_signatures(docs))
-        ).filter(F.col("jaccard") >= 0.5).collect()
+        for r in D.jaccard_pairs(docs, D.minhash_candidates(docs)[0])
+        .filter(F.col("jaccard") >= 0.5)
+        .collect()
     }
     # ground truth: all-pairs exact jaccard (bounded corpus)
     sh = D.with_shingles(docs)
@@ -461,3 +461,109 @@ def test_salted_agg_rejects_cast_wrapped_count_min_sketch(spark, sf_dir):
                 "user_id", F2.lit(0.1), F2.lit(0.01), F2.lit(1)
             ).cast("string")},
         )
+
+
+# --- value checks of the xxhash64 family against a pure-Python reference -----
+
+
+def _doc_tokens(spark, sf_dir):
+    """doc_id -> whitespace tokens (empties dropped), NULL texts skipped."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    return {
+        r.doc_id: [t for t in r.text.split(" ") if t] for r in docs if r.text is not None
+    }
+
+
+def test_xxh64_reference_matches_spark(spark):
+    """The reference reproduces F.xxhash64 on short, over-32-byte and
+    non-ASCII strings and on chained (string, int) arguments."""
+    from tests.xxh64 import spark_xxhash64
+
+    cases = [
+        ("", 0),
+        ("a b c", 3),
+        ("x" * 33 + " long enough for four lanes", 31),
+        ("naïve café 東京", -7),
+    ]
+    df = spark.createDataFrame(cases, "s string, i int")
+    got = df.select(F.xxhash64("s").alias("h1"), F.xxhash64("s", "i").alias("h2")).collect()
+    assert [(r.h1, r.h2) for r in got] == [
+        (spark_xxhash64(s), spark_xxhash64(s, i)) for s, i in cases
+    ]
+
+
+def test_minhash_neardup_matches_python_reference(spark, sf_dir):
+    """Value check of the rows-only ``minhash_neardup`` query: 32 xxhash64
+    permutations, 8 bands of 4 keyed by xxhash64(band, "h,h,h,h"), exact
+    Jaccard >= 0.5 on the candidates — every (id_a, id_b, jaccard) equal
+    to the Spark output at full precision."""
+    from tests.xxh64 import spark_xxhash64
+
+    from convex_batch_processor_spark.queries import QUERIES
+
+    shingles = {}
+    for doc_id, toks in _doc_tokens(spark, sf_dir).items():
+        sh = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+        if sh:
+            shingles[doc_id] = sh
+    perm_hashes = {}  # shingle -> its 32 permutation hashes
+    for sh in shingles.values():
+        for s in sh:
+            if s not in perm_hashes:
+                perm_hashes[s] = [spark_xxhash64(s, p) for p in range(32)]
+    buckets = {}
+    for doc_id, sh in shingles.items():
+        sig = [min(perm_hashes[s][p] for s in sh) for p in range(32)]
+        for b in range(8):
+            key = spark_xxhash64(b, ",".join(str(h) for h in sig[4 * b:4 * b + 4]))
+            buckets.setdefault((b, key), []).append(doc_id)
+    cands = {
+        (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+    }
+    want = set()
+    for a, b in cands:
+        inter = len(shingles[a] & shingles[b])
+        j = inter / (len(shingles[a]) + len(shingles[b]) - inter)
+        if j >= 0.5:
+            want.add((a, b, j))
+    got = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in QUERIES["minhash_neardup"].fn(spark, sf_dir).collect()
+    }
+    assert want, "corpus should contain near-dup pairs"
+    assert got == want
+
+
+def test_simhash_neardup_matches_python_reference(spark, sf_dir):
+    """Value check of the rows-only ``simhash_neardup`` query: 64-bit
+    SimHash over token xxhash64s (ties → 0), 4 × 16-bit chunk blocking,
+    Hamming <= 3 — every (id_a, id_b, hamming) equal to the Spark
+    output."""
+    from tests.xxh64 import spark_xxhash64
+
+    from convex_batch_processor_spark.queries import QUERIES
+
+    sigs = {}
+    for doc_id, toks in _doc_tokens(spark, sf_dir).items():
+        if not toks:
+            continue
+        hs = [spark_xxhash64(t) for t in toks]
+        sums = [sum(1 if (h >> i) & 1 else -1 for h in hs) for i in range(64)]
+        sigs[doc_id] = sum(1 << i for i in range(64) if sums[i] > 0)
+    blocks = {}
+    for doc_id, sig in sigs.items():
+        for c in range(4):
+            blocks.setdefault((c, (sig >> (16 * c)) & 0xFFFF), []).append(doc_id)
+    want = set()
+    for ids in blocks.values():
+        for a in ids:
+            for b in ids:
+                d = bin(sigs[a] ^ sigs[b]).count("1")
+                if a < b and d <= 3:
+                    want.add((a, b, d))
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in QUERIES["simhash_neardup"].fn(spark, sf_dir).collect()
+    }
+    assert want, "corpus should contain near-dup pairs"
+    assert got == want

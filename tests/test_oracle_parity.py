@@ -32,6 +32,13 @@ _SMOKE = [
     "sessionize_events",
     "json_extract_props",
     "neardup_eval_metrics",
+    # the shared LSH pipeline (signatures → band keys → band_join →
+    # verify) through each oracle-backed hash family and verify step
+    "minhash_portable_neardup",
+    "simhash_portable_neardup",
+    "cosine_lsh_portable_neardup",
+    "minhash_estimate_neardup",
+    "semantic_dedup_keep",
     "bloom_decontamination_prefilter",
     "supplier_triangles",
     "golden_record_merge",

@@ -300,7 +300,6 @@ def test_streaming_minhash_signatures_match_batch(spark, tmp_path):
     """Arbitrary micro-batch splits must converge to the batch-built
     group signatures (min-merge is order-independent), and per-batch
     snapshots must be monotone (mins only ever decrease)."""
-    from convex_batch_processor_spark.llmops.dedup import minhash_group_signatures
     from convex_batch_processor_spark.streaming.sketches import (
         streaming_minhash_signatures,
     )
@@ -334,14 +333,14 @@ def test_streaming_minhash_signatures_match_batch(spark, tmp_path):
     batch_df = spark.createDataFrame(DOC_ROWS, DOC_SCHEMA)
     want = {
         r.source: tuple(r[f"h{p}"] for p in range(16))
-        for r in minhash_group_signatures(batch_df, ["source"]).collect()
+        for r in streaming_minhash_signatures(batch_df, ["source"]).collect()
     }
     assert got == want
     # monotonicity: signatures over a PREFIX of the docs are >= the final
     prefix = spark.createDataFrame(DOC_ROWS[:3], DOC_SCHEMA)
     pre = {
         r.source: tuple(r[f"h{p}"] for p in range(16))
-        for r in minhash_group_signatures(prefix, ["source"]).collect()
+        for r in streaming_minhash_signatures(prefix, ["source"]).collect()
     }
     for src_key, sig in pre.items():
         assert all(a >= b for a, b in zip(sig, want[src_key]))
@@ -351,7 +350,9 @@ def test_group_signature_agreement_tracks_overlap(spark):
     """Groups sharing most shingles agree on most mins; disjoint groups
     agree on (almost) none — the containment signal the sketch exists
     for."""
-    from convex_batch_processor_spark.llmops.dedup import minhash_group_signatures
+    from convex_batch_processor_spark.streaming.sketches import (
+        streaming_minhash_signatures,
+    )
 
     rows = [
         (1, "a", "p q r s t u v w"),
@@ -359,7 +360,7 @@ def test_group_signature_agreement_tracks_overlap(spark):
         (3, "c", "m n o k l j i h"),  # disjoint
     ]
     rows_out = (
-        minhash_group_signatures(spark.createDataFrame(rows, DOC_SCHEMA), ["source"])
+        streaming_minhash_signatures(spark.createDataFrame(rows, DOC_SCHEMA), ["source"])
         .selectExpr("source", *[f"h{p}" for p in range(16)])
         .collect()
     )
