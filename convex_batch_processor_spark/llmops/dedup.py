@@ -480,7 +480,7 @@ def minhash_neardup(
     verification ≥ threshold. With ``family=MD5`` (16 perms) any engine
     with md5 reproduces the signatures, candidates and verified pairs
     (minhash_portable_neardup); XXHASH64 is faster (2.55 s vs 3.59 s at
-    sf0.1, interleaved A/B) but Spark-only.
+    sf0.1, interleaved A/B on a 4-core host) but Spark-only.
 
     ``persist_mode`` is the memory/recompute knob; both modes return
     identical pairs (tested):
