@@ -6,144 +6,19 @@ Importing this package populates ``QUERIES``; submodules register at import.
 
 from __future__ import annotations
 
-from .registry import QUERIES, QuerySpec, prioritize, register  # noqa: F401
+from .registry import QUERIES, QuerySpec, register  # noqa: F401
 
-# Import order defines registration order, and the round driver verifies the
-# FIRST 50 registry entries against the DuckDB oracle. Round 1 checked the
-# relational/analytics/dataflow pack; round 2 the llm/misc/late-tpch pack;
-# round 3 llm2 + llm3 + llm. Round 4 front-loads the only entries without a
-# driver verdict yet: the whole llm4 pack (registered last in round 3), the
-# new round-4 pack (llm5), then llm3 (whose product_quantize_pq crashed the
-# round-3 canonicalizer and is now scalarized, and whose kmeans_clusters
-# gained an oracle) and llm (sampled_by_lang gained an oracle). Already-green
-# queries rotate to the back; the local gate (tests/oracle_check.py) still
-# covers all of them every run.
-from . import llm4  # noqa: E402,F401  (no driver verdict yet — first this round)
-from . import llm5  # noqa: E402,F401  (round-4 additions incl. relocated ivf_search_topk)
-from . import llm6  # noqa: E402,F401  (late-r4 sketch pack + image/video codecs — all oracle-backed)
-from . import llm3  # noqa: E402,F401
-from . import llm  # noqa: E402,F401
-from . import llm2  # noqa: E402,F401
-from . import misc  # noqa: E402,F401
-from . import tpch  # noqa: E402,F401
-from . import analytics  # noqa: E402,F401
-from . import dataflow  # noqa: E402,F401
-from . import analytics2  # noqa: E402,F401
-from . import relational  # noqa: E402,F401
-from . import tpch_star  # noqa: E402,F401
-from . import llm7  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm8  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm9  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm10  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm11  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm12  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm13  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm14  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm15  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm16  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm17  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm18  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm19  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm20  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm21  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm22  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm23  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm24  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm25  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm26  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm27  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm28  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm29  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm30  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm31  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm32  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm33  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm34  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm35  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm36  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm37  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm38  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm39  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm40  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm41  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm42  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm43  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm44  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm45  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm46  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm47  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm48  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm49  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm50  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm51  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm52  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm53  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm54  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm55  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm56  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm57  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm58  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm59  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm60  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm61  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm62  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm63  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm64  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm65  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm66  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm67  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm68  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm69  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm70  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm71  # noqa: E402,F401  (late-r4, post-window — round-5 rotation material)
-from . import llm72  # noqa: E402,F401  (r9-pre-flighted pack, registered late r10 when the freeze lifted; moved to the window front at the r11 swap)
-from . import llm73  # noqa: E402,F401  (r10-pre-flighted pack, registered at the r11 close per the one-pack-per-round cadence; registers at the BACK — fronts the r12 window)
-
-
-# Round-12 rotation (NOTES.md "Round-12 rotation plan"): the driver
-# verifies the FIRST 50 registry entries. The r11 window retired the
-# last stale debt (ledger 0 for the first time), so this window carries
-# the 9 oracle-backed llm73 names registered at the r11 close (never
-# driver-verified — placed by hand; `--next-window` only proposes
-# already-verdicted names; the rows-only isotonic_calibration_pava
-# records no hash verdict by contract and stays outside), then 41
-# machine-derived freshness pads (oldest-verdict fresh names —
-# `stale_green_check.py --next-window` re-run STRICT at this swap,
-# with CORRECTNESS_r11.json tracked, matched the NOTES preview
-# exactly: supplier_triangles … clustering_purity). All 50
-# pre-flighted at sf0.01 on r11 final HEAD (50/50 PASS) and
-# re-verified at this swap after the in-window rule-14 strips (see the
-# swap commit: rounded exact ratios emitted raw where the whole chain
-# is fixed-IEEE over bit-identical doubles, kept where a
-# decimal→double cast can pass 2^53 — the r11 zipf leaf-absorption
-# lesson).
-prioritize([
-    # llm73 pack, oracle-backed (9) — never-verified, front of window
-    "top_ngram_char_fraction", "substring_dedup_scrub",
-    "source_mix_divergence", "hashed_linear_quality_score",
-    "chunked_attention_waste", "tokenizer_fertility_by_lang",
-    "span_corruption_plan", "embedding_energy_profile",
-    "bigram_conditional_entropy",
-    # freshness pads (41): oldest-verdict fresh names, tool order
-    "supplier_triangles", "time_decay_user_score", "ts_feature_matrix",
-    "user_rfm_segments", "vocab_entropy_by_source",
-    "weighted_sample_orders", "window_funnel_depth",
-    "zorder_layout_stats", "bfs_hop_distance", "calibration_bins",
-    "char_entropy_quality", "consistent_hash_rebalance",
-    "exact_substr_scrub", "feature_hash_stats",
-    "frequent_word_subsample", "functional_dependency_check",
-    "jaccard_pair_histogram", "k_anonymity_audit",
-    "minhash_estimate_neardup", "mmr_diverse_topk",
-    "neardup_eval_metrics", "negative_sampling_table",
-    "ols_price_normal_eq", "partition_skew_audit", "payload_byte_stats",
-    "peak_concurrency_by_user", "png_decode_features",
-    "randomized_response_rate", "robots_filter_stats", "rrf_fusion_topk",
-    "semantic_dedup_keep", "skipgram_pairs_topk", "target_encode_brand",
-    "tfidf_cosine_pairs", "unicode_normalize_stats",
-    "url_canonicalize_stats", "asof_interpolate_price",
-    "bradley_terry_strengths", "cidr_zone_lookup",
-    "clustering_nmi_vmeasure", "clustering_purity",
-])
+from . import (  # noqa: F401
+    relational, analytics, analytics2, dataflow, misc, tpch, tpch_star, llm,
+    llm2, llm3, llm4, llm5, llm6, llm7, llm8, llm9, llm10, llm11, llm12, llm13,
+    llm14, llm15, llm16, llm17, llm18, llm19, llm20, llm21, llm22, llm23,
+    llm24, llm25, llm26, llm27, llm28, llm29, llm30, llm31, llm32, llm33,
+    llm34, llm35, llm36, llm37, llm38, llm39, llm40, llm41, llm42, llm43,
+    llm44, llm45, llm46, llm47, llm48, llm49, llm50, llm51, llm52, llm53,
+    llm54, llm55, llm56, llm57, llm58, llm59, llm60, llm61, llm62, llm63,
+    llm64, llm65, llm66, llm67, llm68, llm69, llm70, llm71, llm72, llm73,
+    llm74, llm75, llm76,
+)
 
 
 def spark_queries():

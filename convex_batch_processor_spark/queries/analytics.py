@@ -15,10 +15,6 @@ from ..catalog import load_table
 from .registry import DEC, dec, dsum, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # sessionize_events registers FIRST in this module: its round-1 CORRECTNESS
 # row was a hash FAIL (oracle HUGEINT drift, since fixed) and the driver only
 # verifies the first 50 registry entries — this keeps the re-check inside the
@@ -60,7 +56,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (property-tested against a pure-python reference)."""
     from ..operators.sessions import sessionize
 
-    return sessionize(_t(spark, sf_dir, "events"), gap_ms=30 * 24 * 3600 * 1000)
+    return sessionize(load_table(spark, sf_dir, "events"), gap_ms=30 * 24 * 3600 * 1000)
 
 
 @register(
@@ -85,7 +81,7 @@ def window_rank_lag_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every windowed column for its user on one engine only
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc_nulls_first(), "event_id")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return _t(spark, sf_dir, "events").select(
+    return load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "ts",
@@ -118,7 +114,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("ts").asc_nulls_first(), "event_id")
         .rowsBetween(-3, Window.currentRow)
     )
-    return _t(spark, sf_dir, "events").select(
+    return load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "ts",
@@ -138,7 +134,7 @@ def cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over two keys — all 4 grouping combinations in one
     pass (Spark Expand + single hash aggregate)."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"), dsum("l_quantity", "sum_qty"))
     )
@@ -154,7 +150,7 @@ def cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_year_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy (year → priority → grand total)."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("yr"), F.col("o_orderpriority").alias("prio"), "o_totalprice"
     )
     return orders.rollup("yr", "prio").agg(
@@ -177,7 +173,7 @@ def pivot_status_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: linestatus values to columns. Explicit value list avoids the
     extra distinct-values job Spark otherwise runs before pivoting."""
     out = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
         .agg(F.sum(dec("l_quantity")).cast("double"))
@@ -210,7 +206,7 @@ def asof_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|events|×|orders per key|) intermediate.
     """
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(
             F.col("user_id").alias("key"),
             F.col("ts").alias("t"),
@@ -228,7 +224,7 @@ def asof_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame. Filter undated/unkeyed orders; mask NULL-key/NULL-ts events
     # to the oracle's no-match NULL below.
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
         .select(
             F.col("o_custkey").alias("key"),

@@ -11,10 +11,6 @@ from ..catalog import load_table, register_views
 from .registry import dsum, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "window_distribution",
     oracle="""
@@ -31,7 +27,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_rank in one window spec (one shuffle)."""
     w = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").asc(), F.col("o_orderkey").asc())
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 400)
         .select(
             "o_orderkey",
@@ -58,7 +54,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     within $10k below each order's price."""
     w = Window.orderBy(F.col("o_totalprice")).rangeBetween(-10000, Window.currentRow)
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 300)
         .select(
             "o_orderkey",
@@ -86,7 +82,7 @@ def collect_list_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly this shape — all rows for a key as one payload
     (lib.ts:255-277)."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 40)
         .groupBy("o_custkey")
         .agg(
@@ -122,7 +118,7 @@ def grouping_sets_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL (multiplicity-preserving)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
     return o.intersectAll(f)
@@ -138,7 +134,7 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL (bag difference)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_orderpriority")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_orderpriority")
     return o.exceptAll(f)
@@ -170,7 +166,7 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_functions_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array function surface: size/contains/slice/sort/join/distinct over
     a materialized token array (one split per row)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
     base = docs.select("doc_id", toks.alias("toks"))
     return base.select(
@@ -198,7 +194,7 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact (interpolating) percentiles — the small-data twin of
     approx_stats' GK sketches; both engines interpolate identically on the
     same sorted doubles."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("median_price"),
         F.expr("percentile(l_extendedprice, 0.9)").alias("p90_price"),

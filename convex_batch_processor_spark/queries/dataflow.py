@@ -14,10 +14,6 @@ from ..catalog import load_table
 from .registry import dsum, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "s11_delete_anti_join",
     oracle="""
@@ -39,7 +35,7 @@ def s11_delete_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's immutable-storage equivalent is: compute the doomed set (the
     W1 retention rank), anti-join, overwrite. This query returns the
     surviving state (here: newest event per user)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     doomed = (
         ev.withColumn("rn", F.row_number().over(w))
@@ -70,7 +66,7 @@ def s10_state_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides shuffle on the key once; with Delta/Iceberg this
     becomes a real MERGE with file skipping — the logical shape is
     identical."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     patch = (
         orders.filter(F.col("o_orderstatus") == "P")
         .select("o_orderkey", (F.col("o_totalprice") * 1.1).alias("p_totalprice"))
@@ -100,7 +96,7 @@ def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 Spark-idiomatic: tumbling event-time window aggregation
     (``F.window`` — identical semantics under readStream + watermark; the
     streaming twin runs in tests/test_streaming_windows.py)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total_value"))
@@ -131,7 +127,7 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (1-day window, 12-h slide): each event
     lands in 2 overlapping windows (Spark expands them map-side — no
     self-join)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day", "12 hours").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total_value"))
@@ -145,7 +141,7 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile_approx (GK sketch): the 100 TB substitutes for exact
     distinct/median. Engine-specific sketch values → rows-only check;
     tests assert error bounds against exact values."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey").alias("approx_parts"),
         F.percentile_approx("l_extendedprice", 0.5).alias("approx_median_price"),
@@ -171,9 +167,9 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f6_null_coalesce_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6: ?? null-coalescing + ternary guards (lib.ts:61,104,363,513…)
     as COALESCE / CASE over an outer join's null side."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("o_orderkey"))
         .agg(F.count(F.lit(1)).alias("n"), F.min("l_shipdate").alias("first_ship"))
     )

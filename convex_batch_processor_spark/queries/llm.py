@@ -19,10 +19,6 @@ from .registry import register
 from .sqlfrags import MINHASH_MD5_CTES as _MINHASH_MD5_CTES
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- dedup ------------------------------------------------------------------
 
 # sampled_by_lang registers FIRST in this module: it gained its oracle in
@@ -55,7 +51,7 @@ def sampled_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts — which a partition-seeded sampleBy is not — and each row is
     decided map-side with no coordination. The only window runs over the
     DISTINCT-LANG table (bounded: the language inventory)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # NULLS FIRST pinned EXPLICITLY on both sides: Spark defaults to
     # nulls-first asc, DuckDB to nulls-last — a NULL lang row would shift
     # every real stratum's idx on one engine only (the
@@ -88,7 +84,7 @@ def sampled_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: content digest → keep lowest id per digest. One shuffle
     on the digest, uniform keys (no skew) at any scale."""
-    return D.exact_dedup(_t(spark, sf_dir, "documents"))
+    return D.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -104,7 +100,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fingerprint dedup: md5 of the 8-token prefix; groups with >1 doc are
     duplicate clusters (the testdata contains real ones)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", X.prefix_fingerprint().alias("fp"))
         .groupBy("fp")
@@ -157,7 +153,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared-gram block for MinHash-LSH bands (constant bands instead
     of every gram) — see minhash_neardup, the scale path; this exact form
     is its verification baseline."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # persisted: both self-join sides explode from it — without the cache
     # the (expensive) shingle construction runs once per side. Tokens are
     # materialized in their OWN projection first: inlining tokens_col()
@@ -221,7 +217,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for 3 query vectors — the ANN baseline.
     Query side broadcast; candidates never materialize beyond k per query."""
-    return S.knn_bruteforce(_t(spark, sf_dir, "embeddings"), [0, 1, 2], k=5)
+    return S.knn_bruteforce(load_table(spark, sf_dir, "embeddings"), [0, 1, 2], k=5)
 
 
 @register(
@@ -244,7 +240,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle and the recall tests have exact ground truth. The scale path is
     ``cosine_neardup_bucketed`` (banded LSH + rerank, shuffle O(n·bands));
     use that one on real corpora."""
-    return S.cosine_neardup_pairs(_t(spark, sf_dir, "embeddings"), 0.42)
+    return S.cosine_neardup_pairs(load_table(spark, sf_dir, "embeddings"), 0.42)
 
 
 @register(
@@ -271,7 +267,7 @@ def vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent) then accumulated in DECIMAL(18,6) — a raw double SUM
     differs across partition orders in the last ulps and can round to
     different 4-dp values (r8 review finding)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -303,7 +299,7 @@ def vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality scoring: token counts (whitespace + BPE-ish regex),
     stopword ratio, quality gate. Map-only — zero shuffles."""
-    return _t(spark, sf_dir, "documents").select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         X.token_count().alias("n_tokens"),
         X.token_count_re().alias("n_tokens_re"),
@@ -325,7 +321,7 @@ def lang_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus composition profile per (lang, source) — the distribution
     tables a data-mixing pipeline reads."""
     return (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -345,7 +341,7 @@ def lang_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level fingerprints: full-content md5 + prefix shingle md5."""
-    return _t(spark, sf_dir, "documents").select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5(F.col("text")).alias("fp_full"),
         X.prefix_fingerprint().alias("fp_prefix"),
@@ -389,7 +385,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     per language by document frequency (row_number tiebreak df desc, tg
     asc), classification is argmax overlap (tiebreak predicted_lang asc) —
     integer counts end to end, no float drift."""
-    return X.language_id(_t(spark, sf_dir, "documents"))
+    return X.language_id(load_table(spark, sf_dir, "documents"))
 
 
 # --- multimodal -------------------------------------------------------------
@@ -405,7 +401,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload metadata: the multimodal column pattern where filters
     read ONLY the metadata struct (column pruning keeps the binary unread)."""
-    with_payload = M.attach_payload(_t(spark, sf_dir, "documents"))
+    with_payload = M.attach_payload(load_table(spark, sf_dir, "documents"))
     return with_payload.select(
         "doc_id",
         F.col("meta.n_bytes").alias("n_bytes"),
@@ -444,7 +440,7 @@ def payload_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle itself: a non-ASCII regeneration would hash-fail loudly), so
     SQL predicts byte length, first byte, and mean byte value without
     running any Python."""
-    return M.payload_byte_features(M.attach_payload(_t(spark, sf_dir, "documents")))
+    return M.payload_byte_features(M.attach_payload(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -462,8 +458,8 @@ def doc_embedding_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal join: text table ⋈ embedding table on shared ids — the
     shape of joining a document corpus to its embedding index. Small side
     broadcastable; vector math stays a JVM array fold."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
         docs.join(emb, docs.doc_id == emb.vec_id)
         .select(
@@ -492,7 +488,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary: top-25 terms by frequency — the tokenizer-training
     / vocab-pruning primitive. Explode is map-side; one agg shuffle; the
     top-k is a TakeOrdered over the (small) distinct-term table."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -541,7 +537,7 @@ def ivf_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins it), then cosine is the same sequential double fold on both sides
     (list_dot_product ≡ the JVM zip_with/aggregate fold, proven bit-exact
     by knn_bruteforce)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cent = S.label_centroids(emb).select(
         "label",
         F.transform("centroid", lambda v: F.round(v, 6)).alias("centroid"),
@@ -587,7 +583,7 @@ def grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     llmops/groupedmap.py)."""
     from ..llmops.groupedmap import group_zscore
 
-    return group_zscore(_t(spark, sf_dir, "events"))
+    return group_zscore(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -606,7 +602,7 @@ def stratified_sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling is sampled_by_lang below; this systematic form is exactly
     re-runnable across engines and retries, which matters for dataset
     versioning)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("doc_id")
     return (
         docs.select("doc_id", "lang", F.row_number().over(w).alias("rn"))
@@ -649,7 +645,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum through one partition at 100 TB; uniform ids make mod-sampling
     stratification-preserving in expectation, and exactly reproducible
     across engines, retries, and AQE re-plans)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     quality = docs.filter(X.quality_label() == "ok").select(
         "doc_id", "lang", "source", "text", X.token_count().alias("n_tokens")
     )
@@ -727,7 +723,7 @@ def minhash_estimate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the throughput crown and its estimator-error test, like
     minhash_neardup vs the portable twin."""
     return D.minhash_estimate_neardup(
-        _t(spark, sf_dir, "documents"), num_perm=16, threshold=0.5, family=D.MD5
+        load_table(spark, sf_dir, "documents"), num_perm=16, threshold=0.5, family=D.MD5
     )
 
 
@@ -766,7 +762,7 @@ def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup signals. Duplicate edges are harmless downstream (min-label
     propagation is idempotent over repeated edges)."""
     jac = ngram_jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
-    fp = _t(spark, sf_dir, "documents").select(
+    fp = load_table(spark, sf_dir, "documents").select(
         "doc_id", X.prefix_fingerprint().alias("f")
     )
     fp_pairs = (
@@ -831,7 +827,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions by component (small, uniform groups — no skew)."""
     from ..operators.graph import connected_components
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     comp = connected_components(_neardup_edges(spark, sf_dir), "id_a", "id_b")
     scored = (
         docs.join(F.broadcast(comp), docs.doc_id == comp.node)
@@ -893,14 +889,12 @@ def edit_distance_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's char-based and DuckDB's byte-based levenshtein identical)."""
     from ..llmops.dedup import edit_distance_neardup as _ed
 
-    return _ed(_t(spark, sf_dir, "documents"))
+    return _ed(load_table(spark, sf_dir, "documents"))
 
 
 # --- rows-only (xxhash / seeded-hyperplane) variants -----------------------
-# Registered LAST within this module: they are rows-only by design (hash
-# families a SQL oracle cannot replay; each has a parity/recall test and an
-# engine-portable oracle-checked twin in llm5), so the driver-window
-# rotation keeps oracle-backed entries ahead of them (queries/__init__.py).
+# Rows-only by design: hash families a SQL oracle cannot replay; each has a
+# parity/recall test and an engine-portable oracle-checked twin in llm5.
 
 
 @register("minhash_neardup")  # rows-only: xxhash64 not reproducible in DuckDB
@@ -909,13 +903,13 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification ≥0.5 — the scale path for ngram_jaccard_pairs. Checked
     rows-only by the driver; tests assert it finds exactly the exact-Jaccard
     pairs (LSH@this config catches jaccard≥0.5 w.h.p.)."""
-    return D.minhash_neardup(_t(spark, sf_dir, "documents"))
+    return D.minhash_neardup(load_table(spark, sf_dir, "documents"))
 
 
 @register("simhash_neardup")  # rows-only: bit-mix hashing, no SQL equivalent
 def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-64 near-dup pairs (Hamming ≤ 3) with 16-bit-chunk blocking."""
-    return D.simhash_neardup(_t(spark, sf_dir, "documents"))
+    return D.simhash_neardup(load_table(spark, sf_dir, "documents"))
 
 
 @register("cosine_neardup_bucketed")  # rows-only: seeded-hyperplane buckets, not SQL
@@ -925,11 +919,11 @@ def cosine_neardup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket)), exact cosine rerank of the deduped candidate set. Precision
     1.0 vs ``embedding_neardup_pairs``; recall asserted in
     tests/test_llmops.py."""
-    return S.cosine_neardup_pairs_bucketed(_t(spark, sf_dir, "embeddings"), 0.42)
+    return S.cosine_neardup_pairs_bucketed(load_table(spark, sf_dir, "embeddings"), 0.42)
 
 
 @register("lsh_ann_probe")  # rows-only: seeded-hyperplane buckets, not SQL
 def lsh_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane-LSH ANN: probe the query's bucket, exact-rerank
     inside. Tests measure recall vs knn_bruteforce."""
-    return S.lsh_ann(_t(spark, sf_dir, "embeddings"), [0, 1, 2], k=5, n_bits=8)
+    return S.lsh_ann(load_table(spark, sf_dir, "embeddings"), [0, 1, 2], k=5, n_bits=8)

@@ -21,10 +21,6 @@ from .llm import _COMPONENTS_CTES, _neardup_edges
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # PMI co-occurrence pairs
 # ---------------------------------------------------------------------------
@@ -74,7 +70,7 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed self-join shuffles on uniform doc ids (no skew)."""
     from ..llmops.dedup import tokens_col
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     st = (
         docs.select("doc_id", F.explode(tokens_col("text")).alias("term"))
         .distinct()
@@ -193,7 +189,7 @@ def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the standard bounded-fanout cap; at 100 TB the cap bounds edge
     volume at parts x cap^2). The triangle table is persisted once for
     the three per-corner projections."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     edges = (
         _cosupply_pairs(li, _TRI_HOT_PART)
         .persist()  # e1/e2/e3 are three consumers of the same edge set
@@ -259,7 +255,7 @@ def burst_detection_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: corpus-scale work is the one (type, day) rollup; the grid and
     windows run on |types| x |days| control-plane rows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -345,7 +341,7 @@ def golden_record_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(log n)-round min-label propagation in operators/graph.py."""
     from ..operators.graph import connected_components
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     comp = connected_components(_neardup_edges(spark, sf_dir), "id_a", "id_b").select(
         F.col("node").alias("doc_id"), "component_id"
     )

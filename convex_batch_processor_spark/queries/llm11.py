@@ -14,10 +14,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Benford first-digit audit
 # ---------------------------------------------------------------------------
@@ -57,7 +53,7 @@ def benford_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side digit extraction + a 9-group rollup; the total is a
     broadcast scalar."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c = orders.filter(F.col("o_totalprice") > 0).select(
         F.substring(
             F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"), 1, 1
@@ -157,7 +153,7 @@ def km_signup_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus-scale work is two user-keyed aggregations; the risk-set
     cumsum runs on the per-DAY table (bounded by the observation span —
     the value-bounded-global-window precedent of histogram_rank)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     su = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")

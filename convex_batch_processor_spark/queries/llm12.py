@@ -15,10 +15,6 @@ from ..sources.sinks import morton_interleave, morton_interleave_sql
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Z-order layout statistics
 # ---------------------------------------------------------------------------
@@ -69,7 +65,7 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines. Scale: bounds are a broadcast scalar
     row; coding is map-side; the rollup has <= 2^(16-{_Z_BUCKET_SHIFT})
     groups."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     b = orders.agg(
         F.min("o_custkey").alias("ck0"),
         F.max("o_custkey").alias("ck1"),
@@ -164,7 +160,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus scan -> per-stratum (n, sum, sum-of-squares);
     everything after is control-plane."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     vc = F.round(F.col("value") * 100, 0).cast("long")
     s = (
         ev.filter(F.col("value").isNotNull())
@@ -260,7 +256,7 @@ def cosine_lsh_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmops.similarity import cosine_neardup_pairs_portable
 
     return cosine_neardup_pairs_portable(
-        _t(spark, sf_dir, "embeddings"),
+        load_table(spark, sf_dir, "embeddings"),
         threshold=_PLSH_THRESHOLD,
         n_bands=_PLSH_BANDS,
         bits_per_band=_PLSH_BITS,

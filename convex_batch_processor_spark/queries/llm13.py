@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Inter-purchase interval distribution (exact integer microseconds)
 # ---------------------------------------------------------------------------
@@ -59,7 +55,7 @@ def repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed window + one user-keyed aggregate — the same
     single-key shuffle; per-user percentile state is the user's own gap
     list (bounded by purchase history, not corpus)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc()
     )
@@ -134,7 +130,7 @@ def revenue_pareto_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cum_rev / rev_all as DOUBLE: both decimal->double conversions are
     correctly rounded in both engines, then one IEEE division —
     deterministic.)"""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c = orders.select(
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents")
     )

@@ -19,10 +19,6 @@ from .registry import QUERIES, register
 from .llm import _COMPONENTS_CTES
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "dup_cluster_size_census",
     oracle=f"""
@@ -83,7 +79,7 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     never drift apart."""
     from ..llmops import textstats as X
 
-    li = X.language_id(_t(spark, sf_dir, "documents"))
+    li = X.language_id(load_table(spark, sf_dir, "documents"))
     return li.groupBy("actual_lang", "predicted_lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_if(F.col("actual_lang") == F.col("predicted_lang")).alias("n_correct"),

@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Event-sequence constraint validation
 # ---------------------------------------------------------------------------
@@ -78,7 +74,7 @@ def event_sequence_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user-keyed window for the lag, a broadcast rule join, a bounded
     (type x type) rollup. The rule table is config-as-data: the same
     shape extends to any whitelist without a code change."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     rules = spark.createDataFrame(
         [(nxt, p) for nxt, prevs in sorted(_SEQ_RULES.items()) for p in prevs],
         "next_type string, allowed_prev string",
@@ -159,7 +155,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar.
 
     Scale: one user-keyed aggregation; scoring is map-side CASE."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     refd = ev.agg(F.max(F.col("ts").cast("date")).alias("r"))
     base = (
         ev.filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())

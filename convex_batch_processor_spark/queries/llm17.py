@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # CDC changelog apply
 # ---------------------------------------------------------------------------
@@ -56,7 +52,7 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     resurrects. Scale: single shuffle on the key; composes with
     incremental_dedup_delta for the delta-vs-base variant and with
     sinks.upsert_partitioned for the write."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     log = ev.select(
         "user_id",
         "ts",
@@ -171,4 +167,4 @@ def asof_join_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall outside its frame (strict >, unit-tested on a crafted
     collision). Cost is O(|events| + |orders|) shuffled once — no
     row-multiplying range join."""
-    return asof_forward(_t(spark, sf_dir, "events"), _t(spark, sf_dir, "orders"))
+    return asof_forward(load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "orders"))

@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _BOOT_B = 16  # bootstrap replicates
 
 # Poisson(1) CDF thresholds over the 16-bit hash space: a uniform
@@ -72,7 +68,7 @@ def bootstrap_order_price_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: output is B rows; the only shuffle is the {_BOOT_B}-group
     aggregation of map-side partials."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     reps = F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("replicate")
     # F.concat (NULL-propagating, == the oracle's ||), NOT concat_ws: a
     # NULL o_orderkey must yield u = NULL -> weight 0 on both engines —

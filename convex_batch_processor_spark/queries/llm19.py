@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _MB_MIN_SUPPORT = 5  # min co-occurring baskets
 
 
@@ -60,8 +56,8 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies broadcast. The 2-itemset lattice level is the whole cost
     — Apriori's deeper levels reuse this exact shape with `co` as the
     new posting list."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     # ONE basket-keyed aggregation replaces the former distinct + basket
     # self-join (guide §2.3/§2.4 "aggregate before you shuffle"):
     # collect_set dedups (basket, item) in the same pass the old

@@ -23,10 +23,6 @@ from .registry import register
 from .sqlfrags import LM_CTES
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _BM25_TERMS = ["spark", "window", "hash"]
 
 _BM25_SQL = """
@@ -80,7 +76,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval/importance-scoring primitive of training-data curation.
     Inverted-index plan: explode filters to query terms before the one
     shuffle; corpus stats and idf broadcast (llmops/retrieval.py)."""
-    return R.bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS, k=20)
+    return R.bm25_topk(load_table(spark, sf_dir, "documents"), _BM25_TERMS, k=20)
 
 
 @register(
@@ -108,7 +104,7 @@ def eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     any token 8-gram with the eval split (source = src0). Blocked on the
     gram key — one equi-join shuffle, no doc×doc pairing
     (llmops/retrieval.py)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return R.ngram_contamination(
         docs.filter(F.col("source") != "src0"),
         docs.filter(F.col("source") == "src0"),
@@ -137,7 +133,7 @@ def token_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin = exclusive token cumsum div 512 — one window cumsum, no Python
     (llmops/packing.py; the strict ≤capacity greedy twin is
     token_pack_greedy)."""
-    return P.pack_chunks(_t(spark, sf_dir, "documents"), capacity=512)
+    return P.pack_chunks(load_table(spark, sf_dir, "documents"), capacity=512)
 
 
 @register(
@@ -174,7 +170,7 @@ def token_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandas with source as the parallelism unit; verified against a
     python reference in tests (llmops/packing.py) AND against a DuckDB
     recursive-CTE replay of the identical fold."""
-    return P.pack_greedy(_t(spark, sf_dir, "documents"), capacity=512)
+    return P.pack_greedy(load_table(spark, sf_dir, "documents"), capacity=512)
 
 
 @register(
@@ -208,7 +204,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one chunk instead of re-chunking the tail — the dedup-friendly
     long-doc splitter. One doc-keyed shuffle end-to-end
     (llmops/packing.py:cdc_chunks)."""
-    return P.cdc_chunks(_t(spark, sf_dir, "documents"))
+    return P.cdc_chunks(load_table(spark, sf_dir, "documents"))
 
 
 @register("bpe_merges")  # rows-only: iterative merge training, not SQL-expressible
@@ -220,7 +216,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llmops/bpe.py:bpe_train_merges)."""
     from ..llmops.bpe import bpe_train_merges
 
-    return bpe_train_merges(_t(spark, sf_dir, "documents"), n_merges=8)
+    return bpe_train_merges(load_table(spark, sf_dir, "documents"), n_merges=8)
 
 
 @register("bpe_tokenize_stats")  # rows-only: iterative rule training, not SQL
@@ -232,7 +228,7 @@ def bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-lookup join (llmops/bpe.py:bpe_apply)."""
     from ..llmops.bpe import bpe_apply, bpe_train_merges
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     rules = [
         (r.left, r.right)
         for r in bpe_train_merges(docs, n_merges=8).collect()
@@ -258,7 +254,7 @@ def lm_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     CCNet/KenLM-style perplexity filter shape. Inverted-index plan (two
     vocabulary-bounded count shuffles), decimal-accumulated log sums for
     cross-engine determinism (llmops/retrieval.py:bigram_logprob_scores)."""
-    return R.bigram_logprob_scores(_t(spark, sf_dir, "documents"))
+    return R.bigram_logprob_scores(load_table(spark, sf_dir, "documents"))
 
 
 def _semantic_dedup_keep_oracle() -> str:
@@ -301,7 +297,7 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the min-label-propagation fixpoint. The 24×4 Arrow-matmul banding
     stays the production default (higher recall; not SQL-replayable)."""
     return S.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), threshold=0.42, portable=True
+        load_table(spark, sf_dir, "embeddings"), threshold=0.42, portable=True
     )
 
 
@@ -370,7 +366,7 @@ def training_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold at the cost of a fuzzy 10% boundary.) Docs with <2 tokens
     have no LM score and are dropped by the gate's join, matching the
     oracle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lm = R.bigram_logprob_scores(docs)
     scores = (
         docs.filter(F.col("source") != "src0")
@@ -480,7 +476,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal rounding — see the oracle comment) and accumulates in
     DECIMAL(38,0) (BIGINT would overflow near 1e9 docs/source), so the
     per-source mean is order-independent and oracle-exact."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lm = R.bigram_logprob_scores(docs).select(
         "doc_id",
         (F.col("avg_logp") * F.lit(1e9))
@@ -564,4 +560,4 @@ def lm_trigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm_bigram_quality for sharper junk separation. Same inverted-index
     plan (vocabulary-bounded count shuffles) and decimal-accumulated ln
     discipline (llmops/retrieval.py:trigram_logprob_scores)."""
-    return R.trigram_logprob_scores(_t(spark, sf_dir, "documents"))
+    return R.trigram_logprob_scores(load_table(spark, sf_dir, "documents"))

@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "ts_feature_matrix",
     oracle="""
@@ -58,7 +54,7 @@ def ts_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the one corpus-scale op is the (type, day) rollup; windows run
     type-partitioned over the bounded grid."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
     )

@@ -14,10 +14,6 @@ from .llm10 import _cosupply_pairs
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _LPA_HOT_PART = 20
 _LPA_ROUNDS = 3
 
@@ -77,7 +73,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     parts capped before pair expansion) with the label table + a
     node-keyed vote rollup — the textbook Pregel step as DataFrame ops;
     rounds are O(diameter)-ish like the CC operator's propagation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # ONE part-keyed aggregation + map-side pair expansion replaces the
     # former distinct + count filter + part-keyed self-join — the shared
     # _cosupply_pairs edge build (see its docstring; guide §2.3/§2.4)

@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Population Stability Index between time halves
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus scan to the (type, band, half) rollup; the split
     timestamp is a broadcast scalar; everything after is band-table
     sized."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # exact integer-microsecond midpoint: timestamp-interval division can
     # differ by 1 us between engines; (min_us + max_us) div 2 cannot
     mid = ev.agg(
@@ -154,7 +150,7 @@ def chi2_independence_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monday=0 (weekday == isodow-1, the ts_feature_matrix rule).
 
     Scale: one (type, dow) rollup; marginals are bounded broadcasts."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     obs = ev.groupBy(
         "event_type", F.weekday(F.col("ts").cast("date")).alias("dow")
     ).agg(F.count(F.lit(1)).alias("o"))

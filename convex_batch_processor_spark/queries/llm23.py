@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _DEBOUNCE_S = 300  # suppress same-type repeats within 5 minutes
 
 
@@ -53,7 +49,7 @@ def event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrates.
 
     Scale: one (user, type)-keyed window, no other shuffle."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc()
     )
@@ -107,7 +103,7 @@ def longest_active_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: distinct (user, day) bounds the working set at users x days;
     both windows and the rollup key on user_id (uniform)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     days = ev.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
     w = Window.partitionBy("user_id").orderBy("day")
     grp = days.select(

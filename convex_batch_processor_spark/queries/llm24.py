@@ -15,10 +15,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "vocab_entropy_by_source",
     oracle=f"""
@@ -52,7 +48,7 @@ def vocab_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus scan to the (source, term) rollup; the entropy sum
     is term-keyed map-side partials collapsing to |sources| rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.select("source", F.explode(F.filter(F.split("text", " "), lambda x: x != F.lit(""))).alias("term"))
         .groupBy("source", "term")
@@ -115,7 +111,7 @@ def keyset_page_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     The row-value comparison is expressed as the expanded OR form (Spark
     has no tuple comparison): date > cursor OR (date = cursor AND key >
     cursor_key)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cd = F.lit(_CURSOR_DATE).cast("timestamp")
     return (
         orders.filter(

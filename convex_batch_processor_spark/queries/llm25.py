@@ -14,10 +14,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "price_quantity_correlation",
     oracle="""
@@ -66,7 +62,7 @@ def price_quantity_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan to |flags| moment rows; everything after is
     control-plane. (The moment magnitudes stay < 2^53 through sf0.1; at
     petascale, shard the moments and combine — they are associative.)"""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     qc = F.round(F.col("l_quantity"), 0).cast("long")
     pc = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     m = (
@@ -149,7 +145,7 @@ def histogram_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Every step is integer arithmetic; /100.0 is the single exact-operand
     display division."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     c = orders.filter(F.col("o_totalprice").isNotNull()).select(
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),

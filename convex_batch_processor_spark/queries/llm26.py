@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _Z = 1.959964  # ~97.5th normal quantile, fixed literal on both engines
 
 
@@ -58,7 +54,7 @@ def ctr_wilson_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on both engines, rounded once at 9 dp.
 
     Scale: one user-keyed count aggregation; scoring is map-side."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id").agg(
         F.count_if(F.col("event_type") == "click").alias("clicks"),
         F.count_if(F.col("event_type").isin("view", "click")).alias("interactions"),
@@ -122,7 +118,7 @@ def window_funnel_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer microseconds (epoch_us == unix_micros). Scale: three
     user-keyed aggregations/joins on the same key, each stage's input
     pre-filtered by type before the shuffle."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     win_us = _FUNNEL_WINDOW_S * 1_000_000
     t1 = (
         ev.filter(F.col("event_type") == "view")

@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "ols_trend_daily_revenue",
     oracle="""
@@ -76,7 +72,7 @@ def ols_trend_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan -> per-day rollup (bounded by the date span) -> one
     moment row; slope and R^2 are fixed IEEE op sequences rounded at 9
     dp."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     d0 = orders.agg(F.min(F.col("o_orderdate").cast("date")).alias("d"))
     daily = (
         orders.crossJoin(F.broadcast(d0))

@@ -21,10 +21,6 @@ from ..llmops import pii as P
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _with_injected_pii(docs: DataFrame) -> DataFrame:
     """Append deterministic PII to each document: an email when
     doc_id % 3 == 0, a NANP phone when % 5 == 0, a dotted-quad IP when
@@ -97,7 +93,7 @@ def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scan → per-row regex map (codegen, no UDF) → one partial-agg
     shuffle on source. The scrub itself adds zero exchanges."""
-    docs = _with_injected_pii(_t(spark, sf_dir, "documents"))
+    docs = _with_injected_pii(load_table(spark, sf_dir, "documents"))
     scanned = P.scan_pii(docs, "text")
     return scanned.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -139,7 +135,7 @@ def url_domain_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-row regex map (no UDF) + one narrow agg shuffle keyed by
     4 domains — counts partial-aggregate map-side."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     domain_arr = F.array(*[F.lit(d) for d in _DOMAINS])
     with_url = docs.withColumn(
         "text",

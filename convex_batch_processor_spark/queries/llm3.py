@@ -22,10 +22,6 @@ from ..llmops.dedup import tokens_col
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- quality / repetition rules --------------------------------------------
 
 @register(
@@ -54,7 +50,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style document quality rules (length band, mean word length,
     repetition via distinct-token fraction, stopword presence) — one
     map-side pass, no shuffle (llmops/textstats.py:gopher_quality)."""
-    return X.gopher_quality(_t(spark, sf_dir, "documents"))
+    return X.gopher_quality(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -86,7 +82,7 @@ def repetition_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fold it — equal bigrams are adjacent after the sort, so the top
     count is the longest equal run. Pure per-row Column math; at 100 TB
     this is a map-only stage."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", tokens_col("text").alias("toks")
     ).filter(F.size("toks") >= 2)
@@ -149,7 +145,7 @@ def mixture_weights_sqrt(spark: SparkSession, sf_dir: str) -> DataFrame:
     14: both operands are exact 6-dp decimals, so the quotient is an
     exact rational and round(,9) of it is tie-divergent across engines;
     the unrounded division of identical doubles is bit-exact)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     c = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     w = c.withColumn("w_raw", F.round(F.sqrt(F.col("n_docs")), 6))
     tot = w.agg(
@@ -177,7 +173,7 @@ def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap (domain-cap curation: no single crawl
     domain may dominate the mix): keep the 15 lowest-id docs per source —
     deterministic, re-runnable, and one window shuffle keyed by source."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(F.col("doc_id").asc())
     return (
         docs.select("doc_id", "source")
@@ -213,7 +209,7 @@ def length_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus row ever crosses a single-partition operator."""
     from ..operators.rank import histogram_rank
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ranked = histogram_rank(
         docs.select("n_chars", "doc_id"), "n_chars", "doc_id", out_col="rnk"
     )
@@ -272,7 +268,7 @@ def tfidf_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~9-dp decimal can land exactly on a 6-dp half, and re-rounding that
     tie diverges across engines — the raw product of identical doubles
     is bit-exact)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens_col("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -321,7 +317,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 scalar quantization of the embedding column with
     exact reconstruction-error accounting (llmops/similarity.py:
     quantize_int8). Map-side only — no shuffle at any corpus size."""
-    return S.quantize_int8(_t(spark, sf_dir, "embeddings"))
+    return S.quantize_int8(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- native session windows + bucketed range join ---------------------------
@@ -360,7 +356,7 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays it as a classic gaps-and-islands). One shuffle keyed by
     user — the same plan shape Structured Streaming maintains
     incrementally with watermark-evicted state."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     from .registry import dsum
 
     return (
@@ -398,7 +394,7 @@ def view_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     task, and there is no nested-loop fallback at any scale."""
     from ..operators.rangejoin import interval_join_bucketed
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("src_event_id"),
         "user_id",
@@ -477,7 +473,7 @@ def semantic_dedup_kmeans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmops.cluster import semantic_dedup_kmeans
 
     return semantic_dedup_kmeans(
-        _t(spark, sf_dir, "embeddings"), k=8, n_iter=3, round_dp=6
+        load_table(spark, sf_dir, "embeddings"), k=8, n_iter=3, round_dp=6
     )
 
 
@@ -544,7 +540,7 @@ def product_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmops.cluster import product_quantize
 
     out = product_quantize(
-        _t(spark, sf_dir, "embeddings"), m=8, k=16, n_iter=3, round_dp=6
+        load_table(spark, sf_dir, "embeddings"), m=8, k=16, n_iter=3, round_dp=6
     )
     packed = F.aggregate(
         F.col("codes"),
@@ -584,4 +580,4 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments and distances."""
     from ..llmops.cluster import kmeans_clusters as km
 
-    return km(_t(spark, sf_dir, "embeddings"), k=8, n_iter=4, round_dp=6)
+    return km(load_table(spark, sf_dir, "embeddings"), k=8, n_iter=4, round_dp=6)

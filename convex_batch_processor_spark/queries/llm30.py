@@ -16,10 +16,6 @@ from ..llmops import retrieval as R
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "tfidf_cosine_pairs",
     oracle="""
@@ -87,7 +83,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: explode -> (source, gram) equi-join -> pair agg; no term
     yields more than df_cap^2/2 candidates, no cross join, no UDF."""
-    return R.tfidf_cosine_pairs(_t(spark, sf_dir, "documents"))
+    return R.tfidf_cosine_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -149,7 +145,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sort is per-block (lag() windows partitioned by first
     token — no global order, no single-partition WindowExec); one
     exchange on the block key; verification is O(n·w) array intersects."""
-    return D.sorted_neighborhood_pairs(_t(spark, sf_dir, "documents"))
+    return D.sorted_neighborhood_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -187,7 +183,7 @@ def journey_triples_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-user lead() windows (one exchange on user_id), a
     (journey) agg bounded by |event_types|^3, and a TakeOrdered top-20 —
     the global rank runs on the tiny journey census, never on events."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "user_id",

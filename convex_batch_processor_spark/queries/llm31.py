@@ -16,10 +16,6 @@ from .registry import register
 from .sqlfrags import bm25_rank_ctes
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _RRF_TERMS_A = ["spark", "window", "hash"]
 _RRF_TERMS_B = ["join", "sort", "merge"]
 _RRF_POOL, _RRF_K, _RRF_C = 100, 20, 60
@@ -71,7 +67,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each run is the inverted-index BM25 plan (term-filtered
     before the shuffle) ending in a top-100 TakeOrdered; fusion then
     joins and ranks two 100-row lists — bounded, never corpus-sized."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     runs = []
     for terms in (_RRF_TERMS_A, _RRF_TERMS_B):
         run = R.bm25_topk(docs, terms, k=_RRF_POOL)
@@ -164,7 +160,7 @@ def welch_ttest_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds at 6 dp, the division-only statistics at 9 dp.
 
     Scale: one scan, two-arm conditional aggregation, one final row."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     cd = cents.cast("decimal(19,0)")
     m = (
@@ -266,8 +262,8 @@ def gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: join + histogram agg (one shuffle each), histogram-sized
     window, 5-row output."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     v = (
         orders.filter(F.col("o_totalprice").isNotNull())
         .join(cust, orders.o_custkey == cust.c_custkey)

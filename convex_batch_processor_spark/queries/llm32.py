@@ -18,10 +18,6 @@ from .llm6 import _cms_bucket_sql
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _JS_DEPTH, _JS_WIDTH = 4, 512
 
 
@@ -78,8 +74,8 @@ def join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two key-count shuffles (the sketches), a 2048-row sketch
     join, and one exact-size join for the report card (the part a real
     planner would skip)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     ca = orders.groupBy(
         F.col("o_orderkey").cast("string").alias("term")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -174,7 +170,7 @@ def best_split_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan -> (value, count, pos) agg shuffle -> bounded window
     -> map-only gain expression."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # NULL quantities excluded to mirror the oracle (see oracle comment)
     hist = (
         li.filter(F.col("l_quantity").isNotNull())

@@ -14,10 +14,6 @@ from ..llmops import dedup as D
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "exact_substr_scrub",
     oracle="""
@@ -75,4 +71,4 @@ def exact_substr_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join, and a per-doc groupBy rebuild (array_sort over collected
     (pos, token) structs — per-doc state bounded by doc length, no
     global operator anywhere)."""
-    return D.exact_substr_scrub(_t(spark, sf_dir, "documents"))
+    return D.exact_substr_scrub(load_table(spark, sf_dir, "documents"))

@@ -15,10 +15,6 @@ from ..llmops.dedup import tokens_col
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _FH_DIM = 64
 
 
@@ -69,7 +65,7 @@ def feature_hash_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: explode -> (doc, bucket) partial-agg shuffle -> per-doc
     rollup; the vector space is fixed-width no matter the vocabulary."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens_col("text")).alias("t"))
     h = tok.select(
         "doc_id",
@@ -147,7 +143,7 @@ def pareto_front_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A part is on the front iff its size equals its price-group minimum
     AND beats the strict-cheaper running minimum."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     p = part.filter(F.col("p_retailprice").isNotNull()).select(
         "p_partkey",
         F.round(F.col("p_retailprice") * 100).cast("long").alias("cents"),

@@ -16,10 +16,6 @@ from ..llmops import sketches as K
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- consistent hashing ------------------------------------------------------
 
 _CH_VNODES = 4
@@ -90,7 +86,7 @@ def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a map-only scan + one 16-group aggregate. Adding a shard
     reruns the same map with one more vnode set — no state migration
     logic anywhere."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     kp = K.md5_int(F.col("o_orderkey").cast("string"))
     a = orders.select(
         _assign_col(kp, _RING_16).alias("shard"),
@@ -180,7 +176,7 @@ def histogram_quantile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan -> (min, max, n) broadcast -> map-side binning ->
     two bounded-window rollups."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     v = orders.filter(F.col("o_totalprice").isNotNull()).select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
     )

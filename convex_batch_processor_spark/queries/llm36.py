@@ -14,10 +14,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "linear_attribution_credit",
     oracle="""
@@ -69,7 +65,7 @@ def linear_attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup."""
     from ..operators.rangejoin import interval_join_bucketed
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("view_ts")
     )
@@ -159,7 +155,7 @@ def kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs — no explode to n*k rows), one cluster-keyed rollup."""
     from ..llmops.cluster import kmeans_fit
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, k=8, n_iter=4, round_dp=6)
     carr = cents.groupBy().agg(
         F.collect_list(F.struct("cluster_id", "centroid")).alias("_cents")

@@ -12,10 +12,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "png_decode_features",
     oracle="""
@@ -56,5 +52,5 @@ def png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     never cross back to the JVM), partition-parallel, zero shuffle."""
     from ..llmops.multimodal import png_features_fused
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return png_features_fused(docs)

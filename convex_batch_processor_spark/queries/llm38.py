@@ -12,10 +12,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "warc_extract_stats",
     # every predicted column is NULL-guarded: a NULL text packs to a NULL
@@ -46,5 +42,5 @@ def warc_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle."""
     from ..llmops.multimodal import warc_records_fused
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return warc_records_fused(docs)

@@ -18,10 +18,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # (prefix, verdict) — longest-match-wins, the Google robots semantics:
 # /private/ is blocked but its /private/pub/ subtree is re-allowed.
 _ROBOTS_RULES = [
@@ -77,7 +73,7 @@ def robots_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus x 3-row broadcast rule join, one keyed window on the
     URL, one census agg — no shuffle carries the corpus more than
     once."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     path = (
         F.when(did % 5 == 0, F.concat(F.lit("/public/p"), did.cast("string")))
@@ -134,7 +130,7 @@ def html_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two regexp_extract maps over the scan — codegen'd JVM
     expressions, no UDF, no shuffle before the output projection."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id").cast("string"),

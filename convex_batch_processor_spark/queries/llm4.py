@@ -24,10 +24,6 @@ from ..llmops.dedup import tokens_col
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "dup_span_coverage",
     oracle="""
@@ -55,7 +51,7 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents. Inverted-index shape: explode spans → distinct-doc count
     per gram (vocabulary-bounded) → join back per position — the same
     gram-blocked plan as eval-set decontamination, never doc×doc."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("toks")).filter(
         F.size("toks") >= 8
     )
@@ -123,7 +119,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     every shuffle is on user_id, so AQE coalesces them into co-partitioned
     exchanges; no window sort and nothing corpus-wide is re-scanned per
     stage (each stage filters the same cached-by-scan events relation)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s1 = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t1")
     )
@@ -177,7 +173,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two user-keyed shuffles (first-day agg + distinct) then a tiny
     (cohort, offset) rollup — the standard product-analytics rollup
     expressed Spark-first."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     first_day = ev.groupBy("user_id").agg(
         F.min("ts").cast("date").alias("cohort_day")
     )
@@ -214,7 +210,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, bin) keys; the binning floor-division is engine-identical."""
     from .registry import dsum
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             "event_type",
@@ -248,7 +244,7 @@ def rolling_weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the raw events) + one aggregation. This is the scale-correct
     shape; a RANGE window over distinct users would re-buffer the users
     per day."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ud = ev.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
     max_day = ev.agg(F.max(F.col("ts").cast("date")).alias("max_day"))
     contrib = ud.select(
@@ -289,7 +285,7 @@ def event_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL ts pinned FIRST on both sides (the window_rank_lag_running class)."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc()
     )
@@ -323,7 +319,7 @@ def new_vs_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily new vs returning user split: first-activity day per user
     (one user-keyed aggregation), distinct (user, day) activity, then a
     per-day rollup — the standard growth-accounting decomposition."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     fd = ev.groupBy("user_id").agg(F.min("ts").cast("date").alias("first_day"))
     daily = (
         ev.join(fd, "user_id")
@@ -382,7 +378,7 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose only unpartitioned window runs over the FREQUENCY HISTOGRAM
     (~O(√tokens) rows under Zipf), never the vocabulary itself: at 10⁸+
     heap's-law terms no single task sees the term table."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     from ..operators.rank import histogram_rank
 
     tf = (
@@ -428,7 +424,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group sort: fine for bounded group counts; at 100 TB swap in
     approx_percentile and document the error budget (the approx_stats
     pattern in analytics2)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.01)").alias("p01"),
         F.expr("percentile(value, 0.99)").alias("p99"),

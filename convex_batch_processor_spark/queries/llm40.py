@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "url_canonicalize_stats",
     oracle="""
@@ -44,7 +40,7 @@ def url_canonicalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash.
 
     Scale: pure string-expression map (no UDF) + one census agg."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     page = (did % 50).cast("string")
     raw = (
@@ -150,7 +146,7 @@ def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm28 import _with_injected_pii
 
     docs = _with_injected_pii(
-        _t(spark, sf_dir, "documents").withColumn("orig_text", F.col("text"))
+        load_table(spark, sf_dir, "documents").withColumn("orig_text", F.col("text"))
     )
     did = F.col("doc_id")
     # the llm39 rule set reduces to: %5 in {1,3} blocked (longest-match

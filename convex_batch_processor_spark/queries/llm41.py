@@ -13,13 +13,9 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # candidate FDs lhs -> rhs over orders: the key ones hold, the rest are
 # expected to be violated — the point is MEASURING, not assuming
-_FD_CANDIDATES = [
+_FD_PAIRS = [
     ("o_orderkey", "o_custkey"),
     ("o_orderkey", "o_orderstatus"),
     ("o_custkey", "o_orderstatus"),
@@ -41,7 +37,7 @@ def _fd_sql(lhs: str, rhs: str) -> str:
 
 @register(
     "functional_dependency_check",
-    oracle=" UNION ALL ".join(_fd_sql(l, r) for l, r in _FD_CANDIDATES),
+    oracle=" UNION ALL ".join(_fd_sql(l, r) for l, r in _FD_PAIRS),
 )
 def functional_dependency_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency profiling (the Metanome/data-profiling
@@ -58,9 +54,9 @@ def functional_dependency_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist() the raw table here: caching a BASE table's plan hijacks
     every other query's scan of it in a shared session (pushed filters
     stop reaching parquet — caught by the plan-contract suite)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     parts = []
-    for lhs, rhs in _FD_CANDIDATES:
+    for lhs, rhs in _FD_PAIRS:
         g = (
             orders.groupBy(lhs)
             .agg(F.countDistinct(rhs).alias("nd"))
@@ -124,7 +120,7 @@ def hll_accuracy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     would REPLACE with the sketch."""
     from ..llmops.sketches import hll_estimate_from_registers, hll_registers
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     srcs = []
     for colname in ("o_custkey", "o_orderpriority", "o_orderstatus"):
         srcs.append(

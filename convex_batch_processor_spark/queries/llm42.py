@@ -13,10 +13,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "auc_quantity_returnflag",
     oracle="""
@@ -60,7 +56,7 @@ def auc_quantity_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan -> (value, class-count) agg -> histogram window ->
     one moment row; the ranking never touches row granularity."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # NULL scores excluded to mirror the oracle (see oracle comment)
     hist = (
         li.filter(F.col("l_quantity").isNotNull())
@@ -127,7 +123,7 @@ def logloss_quantity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the model AND its evaluation both live on the ~50-row value
     histogram; the corpus is touched once for the class counts."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     hist = li.groupBy(F.col("l_quantity").alias("v")).agg(
         F.count(F.lit(1)).alias("c"),
         F.sum((F.col("l_returnflag") == "R").cast("long")).alias("p"),

@@ -33,10 +33,6 @@ _SUBS_T = 1e-4  # word2vec frequent-word subsample threshold
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _toks():
     return F.filter(F.split("text", " "), lambda x: x != F.lit(""))
 
@@ -77,7 +73,7 @@ def skipgram_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pair volume is len * 2w per doc (linear), aggregated
     map-side first; the 100 TB plan is scan -> generate -> one shuffle.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(_toks().alias("_toks"))
     sz = F.size("_toks")
 
@@ -143,7 +139,7 @@ def negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token-count shuffle, a bounded top-k vocabulary, and a
     window + broadcast normaliser over {_NEG_VOCAB} rows — the ordered
     window never sees corpus-sized input."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(_toks()).alias("term"))
     cnt = tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     vocab = cnt.orderBy(F.col("cnt").desc(), "term").limit(_NEG_VOCAB)
@@ -212,7 +208,7 @@ def frequent_word_subsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: token-count shuffle + bounded top-k; the expectation is a
     per-row map over {_SUBS_TOPK} rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(_toks()).alias("term"))
     tok = tok.persist()  # two consumers (total + counts); derived, not a base table
     tot = tok.agg(F.count(F.lit(1)).cast("long").alias("n"))

@@ -23,10 +23,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # Shared moment list for the OLS query: y = l_extendedprice,
 # x1 = l_quantity, x2 = l_discount (all exact 2-dp decimals).
 _MOMENTS_SQL = """
@@ -99,7 +95,7 @@ def ols_price_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan -> one partial-agg reduce to a single moment row;
     the solve is O(1) regardless of corpus size. Adding features grows
     the moment count quadratically but the plan shape not at all."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("decimal(18,2)")
     dc = F.col("l_discount").cast("decimal(4,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -199,7 +195,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one class-count shuffle; everything after lives on the
     bounded histogram."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     hist = li.groupBy(F.col("l_quantity").alias("v")).agg(
         F.count(F.lit(1)).alias("c"),
         F.sum((F.col("l_returnflag") == "R").cast("long")).alias("p"),
@@ -292,7 +288,7 @@ def calibration_ece_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to calibration_bins — histogram-sized after one
     shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     hist = li.groupBy(F.col("l_quantity").alias("v")).agg(
         F.count(F.lit(1)).alias("c"),
         F.sum((F.col("l_returnflag") == "R").cast("long")).alias("p"),

@@ -29,10 +29,6 @@ _TWO60 = 1152921504606846976.0  # 2^60: 15 md5 hex digits -> uniform in [0,1)
 _CLIP = 100.0  # per-row contribution clip for the noisy sum (sensitivity)
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _uniform(key):
     """Portable md5-uniform in [0,1): 60 hash bits / 2^60 (exact scaling)."""
     h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
@@ -97,7 +93,7 @@ def dp_noisy_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one grouped aggregation; the noise transform is per-GROUP
     scalar math (a handful of rows), zero extra exchanges."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("true_count"),
         # coalesce mirrors the oracle: NULL measurements contribute 0,
@@ -154,7 +150,7 @@ def randomized_response_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same expression shape on both engines.
 
     Scale: per-row map + one aggregate — embarrassingly parallel."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     t = F.when(F.col("value") > 50.0, 1).otherwise(0)
     rep = F.when(
         _uniform(F.col("event_id").cast("string")) < 0.75, t
@@ -200,7 +196,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two grouped aggregations, the second over the bounded
     class table; integer-only output."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     q = docs.groupBy(
         "lang",
         "source",

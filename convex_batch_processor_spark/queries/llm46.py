@@ -28,10 +28,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # doc_id % 5 -> appended payload (leading ASCII space; base text is NFC/
 # NFKC-stable ASCII, so every normalization effect is the payload's):
 #   1: " e" + U+0301 combining acute  NFC -1 char, NFKC -1 char
@@ -110,7 +106,7 @@ def unicode_normalize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash.
 
     Scale: per-row vectorized map + one partial-agg shuffle on source."""
-    docs = _with_norm_payload(_t(spark, sf_dir, "documents"))
+    docs = _with_norm_payload(load_table(spark, sf_dir, "documents"))
     probed = docs.withColumn("np", _norm_probe_udf()(F.col("text")))
     return probed.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -170,7 +166,7 @@ def mojibake_repair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, diverges immediately.
 
     Scale: regex + vectorized map per row, one source-keyed shuffle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # inject onto '' for NULL text (the _with_norm_payload rule): bare
     # concat would null the payload and silently drop a doc_id%6==0 doc
     # from flagged_docs while the doc_id-arithmetic oracle counts it
@@ -244,7 +240,7 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: char explode -> (doc, char) partial agg -> doc agg -> source
     agg; every shuffle key is uniform, and nothing is quadratic."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ch = docs.select(
         "doc_id",
         "source",

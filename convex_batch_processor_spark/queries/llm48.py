@@ -30,10 +30,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- multi-source BFS -------------------------------------------------------
 
 _HOT_PART = 20  # same bounded-fanout cap as the triangle query (llm10)
@@ -92,8 +88,8 @@ def bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair fanout, one distinct); each of the {_HOPS} rounds is one
     node-keyed shuffle of the FRONTIER-reachable subgraph — the
     standard iterative pattern (Pregel's) with bounded rounds."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
     ps = li.select("l_partkey", "l_suppkey").distinct()
     ok = (
         ps.groupBy("l_partkey")
@@ -167,8 +163,8 @@ def target_encode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast dimension join (part is the small side), one
     brand-keyed partial agg, and a broadcast single-row prior — no
     corpus-sized shuffle beyond the aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     pb = part.select("p_partkey", "p_brand")
     j = li.join(F.broadcast(pb), li["l_partkey"] == pb["p_partkey"]).select(
         "p_brand", F.col("l_extendedprice").alias("y")
@@ -254,7 +250,7 @@ def zlib_ratio_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests for the on-real-text ordering property (repetitive < random).
 
     Scale: per-row vectorized compression + one 3-group aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cls = (F.col("doc_id") % 3).cast("int")
     pay = (
         F.when(cls == 0, F.lit(_ZPAY[0]))

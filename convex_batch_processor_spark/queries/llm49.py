@@ -26,10 +26,6 @@ from .registry import register
 _HOLD_S = 300  # each event holds a session slot for 5 minutes
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "peak_concurrency_by_user",
     oracle=f"""
@@ -63,7 +59,7 @@ def peak_concurrency_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed shuffle of 2x|events| endpoint rows; the
     running sum is O(1) window state per key, and the output collapses
     to the bounded peak histogram."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     opens = ev.select(
         "user_id", F.col("ts").alias("t"), F.lit(1).alias("d"), "event_id"
     )
@@ -129,7 +125,7 @@ def padding_waste_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-row map + one bounded-key aggregation; the token count
     never leaves the map side."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # coalesce mirrors the oracle: a NULL text is 0 real tokens
     n = F.least(
         F.coalesce(
@@ -196,7 +192,7 @@ def partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map + bounded-key aggregation; output is {_SKEW_BUCKETS}
     rows."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     bucket = (
         F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10)
         .cast("long")

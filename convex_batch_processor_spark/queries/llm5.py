@@ -33,10 +33,6 @@ from .sqlfrags import LM_CTES as _LM_CTES
 from .sqlfrags import MINHASH_MD5_CTES as _MINHASH_CTES
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- multimodal: REAL audio decode -----------------------------------------
 
 @register(
@@ -72,7 +68,7 @@ def audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode and decode), partition-parallel with no shuffle at all."""
     from ..llmops.multimodal import audio_features_fused
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return audio_features_fused(docs)
 
 
@@ -108,7 +104,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-stratum quantiles without any global operator. avg_logp doubles
     are bit-identical cross-engine (decimal-accumulated ln sums), so the
     ntile order and min/max bounds hash-match exactly."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lm = R.bigram_logprob_scores(docs)
     scored = docs.select("doc_id", "lang").join(
         lm.select("doc_id", "avg_logp"), "doc_id"
@@ -157,7 +153,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE gram-keyed shuffle for first-occurrence, join back on the gram
     key, one doc-keyed reduce. Candidate volume is Σ grams, never doc²;
     the novelty ratio is int/int in double (bit-exact, no rounding)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("t"))
     # persisted: grams feeds BOTH the per-doc gram count and the
     # first-occurrence aggregate — unpersisted, the shingle explode
@@ -239,7 +235,7 @@ def token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the source inventory); the rank/leftover windows run over THAT
     bounded table only — pinned in test_plans.py. (budget·n_tokens is
     BIGINT; at petascale token counts move the multiply to DECIMAL.)"""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tc = (
         docs.select("source", X.token_count().alias("nt"))
         .groupBy("source")
@@ -310,7 +306,7 @@ def snapshot_state_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     same key; everything shuffles once on (user_id, event_type). The
     before-keys are a subset of after-keys (append-only input), so a left
     join is total."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def latest(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id", "event_type").orderBy(
@@ -394,7 +390,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: term-keyed count shuffles (vocabulary-bounded tables joined
     back on the term key), a 1-row broadcast stats frame, one doc-keyed
     reduce. No doc×doc, no global operator anywhere."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", "source", F.explode(tokens_col("text")).alias("w"))
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     ct = tok.filter(F.col("source") == "src0").groupBy("w").agg(
@@ -464,7 +460,7 @@ def minhash_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n·bands), never all-pairs; verification touches candidates only."""
     from ..llmops.dedup import MD5, minhash_neardup
 
-    return minhash_neardup(_t(spark, sf_dir, "documents"), num_perm=16, family=MD5)
+    return minhash_neardup(load_table(spark, sf_dir, "documents"), num_perm=16, family=MD5)
 
 
 # --- engine-portable SimHash ------------------------------------------------
@@ -523,7 +519,7 @@ def simhash_portable_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, integer verify — no all-pairs stage exists."""
     from ..llmops.dedup import MD5, simhash_neardup
 
-    pairs = simhash_neardup(_t(spark, sf_dir, "documents"), max_hamming=1, family=MD5)
+    pairs = simhash_neardup(load_table(spark, sf_dir, "documents"), max_hamming=1, family=MD5)
     # BIGINT, the oracle's type: bit_count yields int
     return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
@@ -602,7 +598,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the driver; the corpus never shuffles."""
     from ..llmops.cluster import pca_power_top_component
 
-    return pca_power_top_component(_t(spark, sf_dir, "embeddings"), n_iter=20)
+    return pca_power_top_component(load_table(spark, sf_dir, "embeddings"), n_iter=20)
 
 
 # --- incremental batch dedup ------------------------------------------------
@@ -644,7 +640,7 @@ def incremental_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins that table on the hash and ranks within batch-hash groups
     (partitioned window). Incremental cost is O(batch) + a hash-table
     probe, the reason this beats rerunning dedup_exact end-to-end."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0).select(
         "doc_id", F.md5("text").alias("h")
     )
@@ -731,5 +727,5 @@ def ivf_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     make training/assignment/probing/reranking engine-reproducible — the
     whole ANN search replays in SQL."""
     return S.ivf_search(
-        _t(spark, sf_dir, "embeddings"), [0, 1, 2], k=5, nprobe=5, round_dp=6
+        load_table(spark, sf_dir, "embeddings"), [0, 1, 2], k=5, nprobe=5, round_dp=6
     )

@@ -27,10 +27,6 @@ from .sqlfrags import MINHASH_MD5_CTES as _MINHASH_CTES
 _TAU = 0.5
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _truth_pairs(sh_raw: DataFrame):
     """(id_a, id_b, exact Jaccard) for every shared-shingle pair via the
     inverted index (a true pair at tau >= 0.5 must share a shingle, so
@@ -114,7 +110,7 @@ def neardup_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the truth join is the PPJoin-shaped shared-shingle expansion
     — the same cost class as the dedup pipeline it audits; run it on a
     representative sample at 100 TB, not the full corpus."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cands, sh_raw = D.minhash_candidates(docs, num_perm=16, family=D.MD5)
     truth = _truth_pairs(sh_raw).filter(F.col("j") >= _TAU)
     # tp needs NO second exact-Jaccard pass over the candidates: the truth
@@ -192,7 +188,7 @@ def jaccard_pair_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one inverted-index pair expansion (shared-shingle pairs
     only), collapsing immediately to a 10-row histogram — nothing
     pairwise is retained."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh_raw = D.with_shingles(docs).persist()
     truth_all = _truth_pairs(sh_raw)
     return (

@@ -27,10 +27,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --- Soundex blocking --------------------------------------------------------
 
 _NAMES = ["Robert", "Rupert", "Smith", "Smyth", "Jackson", "Miller", "Garcia", "Lee"]
@@ -97,7 +93,7 @@ def soundex_blocking_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark's phonetic algorithm on these names fails the hash.
 
     Scale: per-row JVM string function + one bounded-key aggregate."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ni = F.col("doc_id") % len(_NAMES)
     name = F.element_at(F.array(*[F.lit(n) for n in _NAMES]), ni.cast("int") + 1)
     m = docs.select(
@@ -170,7 +166,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate rounding required).
 
     Scale: one user-keyed aggregation, one moment reduce, O(1) math."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dec = "decimal(18,2)"
     zero = F.lit(0).cast(dec)
     per_user = ev.groupBy("user_id").agg(

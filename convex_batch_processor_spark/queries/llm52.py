@@ -24,10 +24,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # inverse-CDF knots of the reference distribution at p = 0.0, 0.1, ... 1.0
 # (a standard-normal-ish ogive, clipped tails)
 _KNOTS = [-2.5, -1.28, -0.84, -0.52, -0.25, 0.0, 0.25, 0.52, 0.84, 1.28, 2.5]
@@ -83,7 +79,7 @@ def quantile_normalize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row application at scale is a broadcast join of this table.
 
     Scale: one histogram shuffle; nothing row-granular is ranked."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # NULL quantities excluded to mirror the oracle (engine NULL-ordering
     # defaults differ, see the oracle comment)
     hist = (
@@ -148,7 +144,7 @@ def purged_time_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts and the day ranges that prove folds do not overlap.
 
     Scale: per-row map + one 4-key aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     d = F.dayofmonth("ts")
     fold = F.least(F.lit(3), ((d - 1) / _FOLD_DAYS).cast("int"))
     purged = F.when(

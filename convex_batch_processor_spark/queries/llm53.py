@@ -24,10 +24,6 @@ from .registry import register
 _BT_ITERS = 3
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # Per-user per-type exact spend; user u "judges" a beats b when
 # spend(u, a) > spend(u, b). Comparable = both types present for u.
 _BT_WINS_SQL = """
@@ -109,7 +105,7 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the duel matrix is one user-keyed self-join (per-user type
     spend is bounded by |types|); iterations run on the |types|^2
     aggregate — control-plane sized, like the pagerank/kmeans pattern."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     spend = ev.groupBy("user_id", "event_type").agg(
         F.sum(F.coalesce(F.col("value"), F.lit(0)).cast("decimal(18,2)")).alias("v")
     )
@@ -227,7 +223,7 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (type, day) aggregation, two self-equi-joins on the
     bounded daily table."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.dayofmonth("ts").alias("d")
     ).agg(
@@ -297,7 +293,7 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell means and three mirrored subtractions.
 
     Scale: one 4-cell aggregation; O(1) arithmetic after."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         (F.col("user_id") % 2).cast("int").alias("treated"),
         F.when(F.dayofmonth("ts") > 15, 1).otherwise(0).alias("post"),

@@ -41,10 +41,6 @@ _JW9 = [round(jaro_winkler(a, b), 9) for a, b in _PAIRS]
 _MATCH_TAU = 0.9
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _pair_cols():
     k = len(_PAIRS)
     cls = (F.col("doc_id") % k).cast("int")
@@ -84,7 +80,7 @@ def jaro_winkler_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: blocked candidate pairs -> map-only Arrow-batched scoring;
     no shuffle before the bounded census."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cls, na, nb = _pair_cols()
     pairs = docs.select(cls.alias("cls"), na.alias("a"), nb.alias("b"))
     scored = jw_score_pairs(pairs, "a", "b")
@@ -149,7 +145,7 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic.
 
     Scale: map-only scoring + one bounded-pattern census."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cls, na, nb = _pair_cols()
     pairs = docs.select(
         "doc_id",

@@ -39,10 +39,6 @@ _W = {
 }
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _CODE_SQL = " ".join(
     f"WHEN '{c}' THEN {1 << i}" for i, c in enumerate(_CHANNELS)
 )
@@ -77,7 +73,7 @@ def exposure_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-dp conversion rate. Useful on its own as the journey-mix report.
 
     Scale: one user-keyed aggregation -> one <=2^{_K}-row census."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     code = F.lit(0)
     for i, c in enumerate(_CHANNELS):
         code = F.when(F.col("event_type") == c, F.lit(1 << i)).otherwise(code)
@@ -124,7 +120,7 @@ def shapley_channel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus is touched once (user exposure masks); the
     subsets x v join is {_K} * 2^{_K} control-plane rows — broadcast
     territory, like the kmeans/pagerank iteration state."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     spark_sess = spark
     code = F.lit(0)
     for i, c in enumerate(_CHANNELS):

@@ -27,10 +27,6 @@ from ..catalog import load_table
 from .registry import QUERIES, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "asof_interpolate_price",
     oracle="""
@@ -82,7 +78,7 @@ def asof_interpolate_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: O(|events| + |orders|) shuffled once on the key — the as-of
     family's standard posture; no range join ever materializes."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("key"),
         F.col("ts").alias("t"),
         F.lit(1).alias("is_event"),
@@ -92,7 +88,7 @@ def asof_interpolate_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("timestamp").alias("o_orderdate"),
         F.lit(None).cast("double").alias("o_totalprice"),
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"),
         F.col("o_orderdate").alias("t"),
         F.lit(0).alias("is_event"),

@@ -32,10 +32,6 @@ from .registry import register
 _LOF_K = 3
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _D6_SQL = """round(sqrt(list_dot_product(
         list_transform(range(1, len(a.embedding) + 1), i -> CAST(a.embedding[i] AS DOUBLE) - CAST(b.embedding[i] AS DOUBLE)),
         list_transform(range(1, len(a.embedding) + 1), i -> CAST(a.embedding[i] AS DOUBLE) - CAST(b.embedding[i] AS DOUBLE)))), 6)"""
@@ -95,7 +91,7 @@ def lof_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     — per-key windows and k-bounded joins."""
     # NULL embeddings carry no distance — excluded on BOTH sides (the
     # kmeans_fit convention; a NULL d6 would also scramble the rank window)
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
     diff2 = F.aggregate(
@@ -214,7 +210,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two passes over events (calibration aggregate, test
     coverage), a broadcast per-type quantile table in between."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     val = F.coalesce(F.col("value"), F.lit(0.0))
     cal_rows = ev.filter(F.dayofmonth("ts") % 2 == 0)
     mean_t = cal_rows.groupBy("event_type").agg(

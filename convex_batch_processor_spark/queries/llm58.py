@@ -28,10 +28,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "waterfill_allocation",
     oracle=f"""
@@ -82,7 +78,7 @@ def waterfill_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one token-count aggregation; the solve runs on the bounded
     per-source table (a window over |sources| rows)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     d = (
         docs.select(
             "source",
@@ -209,7 +205,7 @@ def greedy_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     are few and fixed."""
     from ..llmops.dedup import exploded_shingles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     st = exploded_shingles(docs, n=2, out="term").distinct().persist()
     df = st.groupBy("term").agg(F.count(F.lit(1)).alias("n_t"))
     uni = df.orderBy(F.col("n_t").desc(), "term").limit(_SC_VOCAB).select("term")

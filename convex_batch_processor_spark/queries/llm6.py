@@ -6,11 +6,6 @@ integers via conv/CAST-0x — parity pinned in tests/test_sketches.py)
 makes every sketch REPLAYABLE IN SQL, so all three are oracle-checked:
 the DuckDB twin builds the identical sketch and the hash compare verifies
 cell counters, register ranks, and bit positions bit-for-bit.
-
-Registered INSIDE the round-4 driver window (after llm5 in
-queries/__init__.py): all entries here are oracle-backed and
-never-verified, exactly what the window is for; the 4 rows-only hash
-variants they displaced moved to the back of queries/llm.py.
 """
 
 from __future__ import annotations
@@ -23,10 +18,6 @@ from ..llmops.dedup import exploded_shingles, tokens_col
 from .registry import register
 
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _cms_bucket_sql(term: str, width: int) -> str:
@@ -80,7 +71,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (j, bucket) cells map-side — 4096 cells total whatever the corpus.
     The top-k is TakeOrdered (no global sort/window) and the probe joins
     the broadcast sketch (llmops/sketches.py:cms_sketch)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(tokens_col("text")).alias("term"))
         .groupBy("term")
@@ -124,7 +115,7 @@ def hll_distinct_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-rank — both partial-aggregated map-side. The register sum is an
     exact integer (Σ 2^(K-M)), so the final estimate is one shared IEEE
     expression and hash-matches DuckDB bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     lt = (
         docs.select("lang", F.explode(tokens_col("text")).alias("term"))
         .distinct()
@@ -199,7 +190,7 @@ def bloom_decontamination_prefilter(spark: SparkSession, sf_dir: str) -> DataFra
     (Spark's native runtime bloom join does the same trick transparently
     for equi-joins; this form persists/ships the filter between jobs.)"""
     grams = exploded_shingles(
-        _t(spark, sf_dir, "documents"), n=_BLOOM_N, out="gram"
+        load_table(spark, sf_dir, "documents"), n=_BLOOM_N, out="gram"
     )
     # persisted: eval_grams is consumed twice (bitmap build + broadcast
     # in_eval join) and is BOUNDED (the eval split's distinct grams);
@@ -277,7 +268,7 @@ def image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     from ..llmops.multimodal import image_features_fused
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return image_features_fused(docs)
 
 
@@ -329,5 +320,5 @@ def video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame sampling multiplies rows map-side only."""
     from ..llmops.multimodal import video_frames_fused
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return video_frames_fused(docs, every_n=2)

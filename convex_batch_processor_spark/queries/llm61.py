@@ -37,10 +37,6 @@ _DISC = {i: round(1.0 / math.log2(i + 1), 9) for i in range(1, _K + 1)}
 _DISC_SQL = " ".join(f"WHEN {i} THEN {_DISC[i]!r}" for i in range(1, _K + 1))
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _GAIN_SQL = " + ".join(
     f"CASE WHEN list_contains(t, '{t}') THEN 1 ELSE 0 END" for t in _TERMS
 )
@@ -118,7 +114,7 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the run is the term-filtered inverted-index BM25 plan; gains
     are one map over the token arrays; every metric lives on the
     {_K}-row run plus a 4-cell gain census."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     run = R.bm25_topk(docs, _TERMS, k=_K)
     wr = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     run = run.select("doc_id", F.row_number().over(wr).alias("i"))

@@ -25,10 +25,6 @@ _PARTS = 32  # target shuffle partitions for the salting advisor
 _HOT_FACTOR = 2.0  # keys above 2x the fair per-partition share get salted
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "join_order_advisor",
     oracle="""
@@ -74,9 +70,9 @@ def join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: three count aggregates and two FK-join counts (each one
     shuffle); the advisory itself is 3 rows of arithmetic."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     co = o.agg(F.count(F.lit(1)).cast("long").alias("n_o"))
     cn = n.agg(F.count(F.lit(1)).cast("long").alias("n_n"))
     j_oc = (
@@ -162,7 +158,7 @@ def salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one key-count aggregation + a TakeOrdered(10) — the advisory
     never materializes more than the hot tail."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
     tot = g.agg(F.sum("n").cast("long").alias("total"))
     share = (F.col("n") * _PARTS).cast("long") / F.col("total").cast("double")

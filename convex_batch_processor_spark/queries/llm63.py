@@ -22,10 +22,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "readability_scores",
     oracle=f"""
@@ -66,7 +62,7 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: word explode -> per-doc aggregate -> source aggregate; every
     stage is a uniform-key shuffle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = docs.select(
         "doc_id",
         "source",
@@ -137,7 +133,7 @@ def ttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: word explode -> per-doc distinct aggregate -> source
     aggregate (the distinct is per (doc, word), a uniform key)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = docs.select(
         "doc_id",
         "source",

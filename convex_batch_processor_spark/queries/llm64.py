@@ -41,10 +41,6 @@ def _cidr_rows():
     return out
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # doc_id % 256 decides the second octet -> the zone is closed-form:
 #   0..63   -> zone-a (/10 beats /8)
 #   64..79  -> zone-b-hot (/12 beats /10 and /8)
@@ -90,7 +86,7 @@ def cidr_zone_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side parse, broadcast 5-row dim join (fanout <= table
     size), per-IP rank over <= 3 candidate rows — zero corpus shuffle
     before the bounded zone census."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     ip_str = F.concat_ws(
         ".",
         F.lit("10"),

@@ -33,10 +33,6 @@ _SPOOF = " p\u0430ge"
 _GREEK = " \u03b1\u03b2\u03b3"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "homoglyph_spoof_stats",
     oracle="""
@@ -63,7 +59,7 @@ def homoglyph_spoof_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: token explode -> two per-token regexps -> source-keyed
     partial aggregation; map-only until the bounded census."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     injected = docs.withColumn(
         "text",

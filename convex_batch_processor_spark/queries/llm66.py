@@ -25,10 +25,6 @@ _TAU = 0.8  # containment threshold
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "containment_dup_pairs",
     oracle=f"""
@@ -64,7 +60,7 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared-shingle pairs only, never all-pairs); the 100 TB variant
     blocks with MinHash bands exactly as minhash_neardup does — containment
     only changes the verify formula."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sh_raw = D.with_shingles(docs).persist()
     st = sh_raw.select(
         "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("shingle")

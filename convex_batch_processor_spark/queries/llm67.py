@@ -34,10 +34,6 @@ _D6_SQL = """round(sqrt(list_dot_product(
         list_transform(range(1, len(a.embedding) + 1), i -> CAST(a.embedding[i] AS DOUBLE) - CAST(b.embedding[i] AS DOUBLE)))), 6)"""
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "dbscan_embedding_clusters",
     oracle=f"""
@@ -99,7 +95,7 @@ def dbscan_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star available), one border min-join."""
     from ..operators.graph import connected_components
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
     diff2 = F.aggregate(

@@ -27,10 +27,6 @@ from ..catalog import load_table
 from .registry import QUERIES, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _asg_sql() -> str:
     return f"""asg AS MATERIALIZED (
         SELECT p.vec_id, p.cluster_id, e.label
@@ -41,7 +37,7 @@ def _asg_sql() -> str:
 
 def _asg_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = QUERIES["dbscan_embedding_clusters"].fn(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     return (
         pred.filter(F.col("cluster_id").isNotNull())
         .join(emb, "vec_id")

@@ -22,10 +22,6 @@ from ..catalog import load_table
 from .registry import QUERIES, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _asg_sql() -> str:
     return f"""asg AS MATERIALIZED (
         SELECT p.vec_id, p.cluster_id, e.label
@@ -100,7 +96,7 @@ def clustering_nmi_vmeasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the ARI query — the clustering dominates, the
     evaluation is contingency-sized."""
     asg_pred = QUERIES["dbscan_embedding_clusters"].fn(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     asg = (
         asg_pred.filter(F.col("cluster_id").isNotNull())
         .join(emb, "vec_id")

@@ -17,10 +17,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "hll_union_sources",
     oracle=f"""
@@ -72,7 +68,7 @@ def hll_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration is a self-join of the SOURCE INVENTORY (bounded, like the
     lang inventory windows); exact counts exist for verification and
     would be dropped at scale — they are the quadratic part."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # persisted: four consumers (registers, per-source exacts, both sides of
     # the exact-intersection self-join) would otherwise each rescan the
     # corpus — the plan test pins the scan count

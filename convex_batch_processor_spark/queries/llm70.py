@@ -20,10 +20,6 @@ from ..catalog import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "ks_wasserstein_drift",
     oracle="""
@@ -85,7 +81,7 @@ def ks_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one value-histogram aggregation; the cumulative window runs
     on the VALUE GRID (distinct 2-dp values), never row granularity —
     the histogram_rank discipline."""
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     )
     h = ev.groupBy(F.col("value").alias("v")).agg(

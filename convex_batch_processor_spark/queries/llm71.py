@@ -33,12 +33,8 @@ _DAILY_SQL = """
 """
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     return ev.groupBy(F.dayofmonth("ts").alias("d")).agg(
         F.sum(F.coalesce(F.col("value"), F.lit(0)).cast("decimal(18,2)"))
         .cast("decimal(18,2)")

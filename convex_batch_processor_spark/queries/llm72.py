@@ -1,12 +1,5 @@
-"""The round-11 surface pack (REGISTERED late round 10 — the stale-green
-backlog cleared with the r10 rotation, lifting the registry freeze per
-NOTES §"Post-freeze surface plan" / VERDICT r9 #4).
-
-These are the runnable candidates from NOTES §"Post-freeze surface
-plan", built and oracle-paired in round 9 AHEAD of registration (two
-rounds of parity/fixture/property/scale green before a driver slot).
-The pack registers at the BACK of the registry — outside the round-10
-driver window — and rotates to the front of the round-11 window.
+"""The round-11 surface pack: the runnable candidates from NOTES
+§"Post-freeze surface plan", built and oracle-paired in round 9.
 ``tests/test_r11_preflight.py`` runs every entry through the same
 compare() harness the fixture gates use, at sf0.001, a crafted boundary
 fixture, AND sf0.1 (the rounding-tie tier).
@@ -32,30 +25,12 @@ from ..llmops.dedup import positional_gram_array, positional_gram_index, tokens_
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# name -> (fn, oracle_sql) — kept as the pre-flight harness's index
-# (tests/test_r11_preflight.py and tests/scale_check.py parametrize
-# over it); registration happens at the bottom of the module.
-CANDIDATES: dict[str, tuple] = {}
-
-
-def _candidate(name: str, oracle: str | None = None):
-    def deco(fn):
-        CANDIDATES[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
 # --- 1. exact-substring dedup via positional n-gram chains -------------------
 
 _SPAN_N = 8  # gram width (tokens)
 
 
-@_candidate(
+@register(
     "substring_dedup_spans",
     oracle=f"""
     WITH toks AS (
@@ -96,7 +71,7 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions, never doc x doc; the islands window partitions by doc_id
     (uniform keys). Spark pos is 0-based vs the oracle's 1-based unnest,
     but the islands key pos - row_number() is translation-invariant."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # shared gram stream + cross-doc duplicated-gram set (persisted by
     # the helper's two-consumer contract); llm73's scrub accounting
     # reads the SAME helper so the two queries stay one policy
@@ -121,7 +96,7 @@ def substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KN_D = 0.75  # the standard fixed discount
 
 
-@_candidate(
+@register(
     "kneser_ney_doc_logprob",
     oracle=f"""
     WITH toks AS (
@@ -173,7 +148,7 @@ def kneser_ney_doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-bounded, never corpus-scale); the join back to the
     occurrence stream is bigram-keyed (uniform md5-like distribution of
     word pairs). |types| joins as a one-row broadcast."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
         F.size("t") >= 2
     )
@@ -243,7 +218,7 @@ def _hits_iter_sql(i: int) -> str:
         FROM e JOIN a{i} ON a{i}.s = e.s GROUP BY e.p)"""
 
 
-@_candidate(
+@register(
     "hits_part_supplier",
     oracle=(
         """
@@ -294,7 +269,7 @@ def hits_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are one-row broadcasts at the end. Path counts reach
     ~degree^6 — DECIMAL(38,0) holds 1e38, far beyond any real degree
     distribution."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     e = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct().persist()
@@ -380,7 +355,7 @@ def _acklam_sql(p: str) -> str:
     )
 
 
-@_candidate(
+@register(
     "rank_gauss_prices",
     oracle=f"""
     WITH ranked AS (
@@ -418,8 +393,8 @@ def rank_gauss_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning within segment (rank via distributed sort), which Spark
     SQL's window already executes as a sort within partitions; the
     transform itself stays map-side after the rank."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select(
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
     # NULLS FIRST pinned on BOTH sides (the r8 rule: Spark windows sort
@@ -450,7 +425,7 @@ def rank_gauss_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TAUS = (0.3, 0.7)
 
 
-@_candidate(
+@register(
     "temperature_mix_weights",
     oracle=f"""
     WITH c AS (
@@ -487,7 +462,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle (groupBy source, |sources| bounded); the totals
     join back as a one-row broadcast. Token counting is map-side
     size(split()) — no explode."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     c = docs.groupBy("source").agg(
         F.sum(F.size(tokens_col("text"))).alias("n_tokens")
     )
@@ -519,7 +494,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RES_K = 20
 
 
-@_candidate(
+@register(
     "stratified_reservoir_sample",
     oracle=f"""
     WITH h AS (
@@ -546,7 +521,7 @@ def stratified_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (k=20) once Spark pushes the filter into the sort —
     no full sort of the corpus is retained. Hash keys are uniform, so
     strata skew only as the underlying language mix does."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("hk", "doc_id")
     return (
         docs.select(
@@ -565,7 +540,7 @@ def stratified_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KEYWORDS = ("spark", "merge", "window", "vector", "stream", "hash")
 
 
-@_candidate(
+@register(
     "keyword_tag_counts",
     oracle=f"""
     WITH kw(kw) AS (VALUES {", ".join(f"('{k}')" for k in _KEYWORDS)}),
@@ -594,7 +569,7 @@ def keyword_tag_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark_kw = F.broadcast(
         spark.createDataFrame([(k,) for k in _KEYWORDS], "tok string")
     )
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
     return (
         tok.join(spark_kw, "tok")
@@ -609,7 +584,7 @@ def keyword_tag_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 8. discrete-time tenure hazard table ------------------------------------
 
 
-@_candidate(
+@register(
     "tenure_hazard_table",
     oracle="""
     WITH u AS (
@@ -645,7 +620,7 @@ def tenure_hazard_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is global BUT runs over that bounded day-histogram, the
     audited bounded-global-window class (tenure_day has no NULLs — the
     ts filter precedes the datediff)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     u = ev.groupBy("user_id").agg(
         F.datediff(F.max("ts").cast("date"), F.min("ts").cast("date")).alias(
             "tenure_d"
@@ -673,7 +648,7 @@ def tenure_hazard_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 9. per-dimension embedding standardization stats -------------------------
 
 
-@_candidate(
+@register(
     "embedding_dim_standardize",
     oracle="""
     WITH el AS (
@@ -715,7 +690,7 @@ def embedding_dim_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is |dims| rows. At 100 TB the same plan holds — the dim key
     is low-cardinality but each partial aggregate is a single decimal
     pair, so the tree-aggregate combiners absorb the fan-in."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     e6 = F.round(F.col("e").cast("double"), 6).cast("decimal(12,6)")
     el = emb.select(F.posexplode("embedding").alias("pos", "e")).select(
         (F.col("pos") + 1).alias("dim"), e6.alias("e")
@@ -742,7 +717,7 @@ def embedding_dim_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_CAP = 512
 
 
-@_candidate("pack_best_fit_decreasing", oracle=None)
+@register("pack_best_fit_decreasing", oracle=None)
 def pack_best_fit_decreasing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-fit-decreasing bin packing of documents into 512-token
     (_PACK_CAP) training sequences, per source shard: sort docs by (n_tokens DESC,
@@ -763,7 +738,7 @@ def pack_best_fit_decreasing(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is O(docs x bins) per SHARD, never global; shards are
     independent and the shuffle key is the source column. A production
     variant keeps bins in a fill-ordered heap for O(docs log bins)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "source", "doc_id", F.size(tokens_col("text")).cast("int").alias("n_tokens")
     )
@@ -800,7 +775,7 @@ def pack_best_fit_decreasing(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ZCA_EPS = 1e-6
 
 
-@_candidate("zca_whitening_matrix", oracle=None)
+@register("zca_whitening_matrix", oracle=None)
 def zca_whitening_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZCA whitening matrix W = U diag(1/sqrt(lambda + 1e-6)) U^T (_ZCA_EPS) of
     the embedding covariance — the rotation-preserving whitening used to
@@ -821,7 +796,7 @@ def zca_whitening_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetry invariants."""
     import numpy as np
 
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
 
     def moments(batches):
         import pandas as pd
@@ -872,7 +847,7 @@ def _phrase_values_sql() -> str:
     )
 
 
-@_candidate(
+@register(
     "phrase_tag_spans",
     oracle=f"""
     WITH ph(phrase, plen) AS (VALUES {_phrase_values_sql()}),
@@ -909,7 +884,7 @@ def phrase_tag_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles; the only shuffle is the final (doc, phrase)
     reduce. Candidate volume is sum-of-positions x |length set|, never
     corpus x dictionary."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokens_col("text").alias("t"))
     lengths = sorted({len(p.split()) for p in _PHRASES})
     ph = F.broadcast(
@@ -944,14 +919,3 @@ def phrase_tag_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("pos").cast("long").alias("first_pos"),
         )
     )
-
-
-# --- registration (freeze lifted late round 10) -------------------------------
-# Every candidate above shipped two rounds of pre-flight green (DuckDB
-# parity at sf0.001 + sf0.01 + sf0.1, crafted boundary fixture,
-# partition-invariance probe, property tests, scale sweep) before this
-# loop ran — the NOTES registration rule: pre-flight BEFORE registering,
-# in the same module.
-for _name, (_fn, _oracle) in CANDIDATES.items():
-    register(_name, _oracle)(_fn)
-del _name, _fn, _oracle

@@ -1,7 +1,4 @@
-"""Round-12 pre-flight pack (NOT registered — one pack registers per
-round, and round 10 registered llm72; this pack follows llm72's cadence:
-built and gated one round ahead, registered at the round-11 close if the
-rotation capacity holds, fronting the round-12 window).
+"""Round-12 pack.
 
 The tranche continues the LLM-training-data surface with the curation
 operators the llm72 pack didn't cover: Gopher-style repetition signals,
@@ -12,8 +9,6 @@ tokenizer fertility, an isotonic (PAVA) calibration fit, deterministic
 span-corruption mask planning (T5-style denoising), a matryoshka
 embedding energy profile, and corpus bigram conditional entropy.
 
-This module is deliberately NOT imported by ``queries/__init__.py``;
-nothing here can reach the driver window or add stale-green debt.
 ``tests/test_r12_preflight.py`` runs every entry through the same
 compare() harness the fixture gates use at sf0.001, a crafted boundary
 fixture, AND sf0.1 (the rounding-tie tier), plus python-reference parity
@@ -46,29 +41,12 @@ from .llm72 import _SPAN_N
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# name -> (fn, oracle_sql) — the shape register() consumes at
-# registration time (the llm72 mechanism).
-CANDIDATES: dict[str, tuple] = {}
-
-
-def _candidate(name: str, oracle: str | None = None):
-    def deco(fn):
-        CANDIDATES[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
 # --- 1. Gopher repetition signals: top n-gram character coverage -------------
 
 _REP_NS = (2, 3, 4)
 
 
-@_candidate(
+@register(
     "top_ngram_char_fraction",
     oracle=f"""
     WITH toks AS (
@@ -120,7 +98,7 @@ def top_ngram_char_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes over token arrays) -> ONE (doc, n, gram)-keyed shuffle ->
     one (doc, n) reduce. Candidate volume is 3 x sum-of-positions,
     never doc x doc; gram keys are near-uniform."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     base = docs.select(
         "doc_id",
         tokens_col("text").alias("t"),
@@ -182,7 +160,7 @@ SCRUB_COVERED_CTES = f"""toks AS (
         , unnest(range(g.pos, g.pos + {_SCRUB_N})) AS c(tok_idx))"""
 
 
-@_candidate(
+@register(
     "substring_dedup_scrub",
     oracle=f"""
     WITH {SCRUB_COVERED_CTES},
@@ -217,7 +195,7 @@ def substring_dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is 8x the DUPLICATED-position count only (duplication-bounded,
     not corpus-bounded), then one doc-keyed distinct+reduce. The final
     join back to per-doc sizes is doc-keyed."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select("doc_id", tokens_col("text").alias("t")).select(
         "doc_id", F.size("t").cast("long").alias("n_tokens")
     )
@@ -243,7 +221,7 @@ def substring_dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 3. source-mix divergence from uniform -------------------------------------
 
 
-@_candidate(
+@register(
     "source_mix_divergence",
     oracle="""
     WITH c AS (
@@ -287,7 +265,7 @@ def source_mix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one |sources|-keyed shuffle; the total joins back as a
     one-row broadcast; token counting is map-side size(split())."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # zero-token sources excluded on both sides (see the oracle comment)
     c = docs.groupBy("source").agg(
         F.sum(F.size(tokens_col("text"))).cast("long").alias("n_tokens")
@@ -340,7 +318,7 @@ def hashed_token_weight_sql(tok_sql: str) -> str:
     )
 
 
-@_candidate(
+@register(
     "hashed_linear_quality_score",
     oracle=f"""
     WITH tok AS (
@@ -380,7 +358,7 @@ def hashed_linear_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: token explode (map-side) -> one doc-keyed reduce; the weight
     is a pure column expression, so there is NO model state to ship —
     the 100 TB plan is a single map + reduce."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
     wi = hashed_token_weight("tok")
     s = tok.select("doc_id", wi.alias("wi")).groupBy("doc_id").agg(
@@ -405,7 +383,7 @@ def hashed_linear_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CHUNK_CAP = 512
 
 
-@_candidate(
+@register(
     "chunked_attention_waste",
     oracle=f"""
     WITH sized AS (
@@ -452,7 +430,7 @@ def chunked_attention_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window cumsum per source (the packing recipe), one
     (source, bin) reduce — no Python, no pair explosion; n^2 peaks at
     (per-doc token count)^2 inside a BIGINT."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "source",
         "doc_id",
@@ -494,7 +472,7 @@ def chunked_attention_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 6. tokenizer fertility by language ----------------------------------------
 
 
-@_candidate(
+@register(
     "tokenizer_fertility_by_lang",
     oracle="""
     WITH d AS (
@@ -535,7 +513,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs >= 1 by construction.
 
     Scale: map-side size/length -> one |langs|-keyed reduce."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # materialize the token array once: two inline tokens_col() calls
     # would run the split+filter twice per row (the shingle perf contract)
     d = docs.select("lang", tokens_col("text").alias("t")).select(
@@ -565,7 +543,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 7. isotonic (PAVA) calibration fit (rows-only) ----------------------------
 
 
-@_candidate("isotonic_calibration_pava", oracle=None)
+@register("isotonic_calibration_pava", oracle=None)
 def isotonic_calibration_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic regression (pool-adjacent-violators) of the return rate
     against quantity — the nonparametric calibration fit that upgrades
@@ -586,7 +564,7 @@ def isotonic_calibration_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: pool means are computed from exact integer (sum_p,
     sum_c) pairs carried through the pooling loop; the emitted rate is
     one raw double division per pool (rule 14 — unrounded)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     hist = li.groupBy(F.col("l_quantity").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum((F.col("l_returnflag") == "R").cast("long"))
@@ -637,7 +615,7 @@ _MASK_PCT = 15   # target masked-token percentage
 _SPAN_LEN = 3    # mean/target span length (tokens)
 
 
-@_candidate(
+@register(
     "span_corruption_plan",
     oracle=f"""
     WITH sized AS (
@@ -691,7 +669,7 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-side size + a bounded explode (one row per planned span,
     ~n_tokens/20 per doc) — no shuffle at all until a consumer
     aggregates; the hash placement is a pure column expression."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "doc_id", F.size(tokens_col("text")).cast("long").alias("n_tokens")
     )
@@ -753,7 +731,7 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ENERGY_KS = (16, 32, 48)
 
 
-@_candidate(
+@register(
     "embedding_energy_profile",
     oracle=f"""
     WITH el AS (
@@ -800,7 +778,7 @@ def embedding_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: posexplode is map-side; ONE shuffle on the 64-value dim key
     collapses the corpus to |dims| rows; everything after (the k-table
     join, the total) is constant-size."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     e = F.col("e").cast("double")
     el = emb.select(F.posexplode("embedding").alias("pos", "e")).select(
         (F.col("pos") + 1).alias("dim"),
@@ -833,7 +811,7 @@ def embedding_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 10. corpus bigram conditional entropy --------------------------------------
 
 
-@_candidate(
+@register(
     "bigram_conditional_entropy",
     oracle="""
     WITH toks AS (
@@ -877,7 +855,7 @@ def bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; c1 is an aggregate OF that vocabulary-bounded table; N joins
     as a one-row broadcast; the term stream is |bigram types|, not
     corpus occurrences."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select(tokens_col("text").alias("t")).filter(F.size("t") >= 2)
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("t") - 1),
@@ -913,18 +891,3 @@ def bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cond_entropy_nats",
         )
     )
-
-
-# --- registration (round-11 close, per the one-pack-per-round cadence) --------
-# Every candidate above shipped TWO rounds of pre-flight green before
-# this loop ran (built late r10): DuckDB parity at sf0.001 + sf0.01 +
-# sf0.1, the crafted boundary fixture in tests/test_r12_preflight.py,
-# a 200-partition/64KB-split partition-invariance probe at two scales,
-# plan shapes (zero cartesians, zero global windows — the PAVA
-# sequential step runs over the collapsed histogram only), and the
-# scale sweep (worst second-decade alpha 0.836). Registers at the BACK
-# of the registry — outside the round-11 driver window — and fronts
-# the round-12 window per NOTES "Round-12 rotation plan".
-for _name, (_fn, _oracle) in CANDIDATES.items():
-    register(_name, _oracle)(_fn)
-del _name, _fn, _oracle

@@ -1,14 +1,10 @@
-"""Round-13 pre-flight pack (NOT registered — one pack registers per
-round: llm72 registered in r10, llm73 registers at the r11 close, this
-pack at the r12 close, each after a full round of gating).
+"""Round-13 pack.
 
 The tranche closes the REPORTING layer of the LLM-data pipeline — the
 queries a pipeline owner reads to decide what to ship: cross-source
 leakage, dedup impact, quality-filter retention, vocabulary scaling,
 embedding-space outliers, and fill-in-middle split planning.
 
-This module is deliberately NOT imported by ``queries/__init__.py``;
-nothing here can reach the driver window or add stale-green debt.
 ``tests/test_r13_preflight.py`` runs every entry through the same
 compare() harness the fixture gates use at sf0.001, a crafted boundary
 fixture, AND sf0.1 (the rounding-tie tier).
@@ -41,29 +37,13 @@ from .llm73 import (
     hashed_token_weight,
     hashed_token_weight_sql,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# name -> (fn, oracle_sql) — the shape register() consumes at
-# registration time (the llm72/llm73 mechanism).
-CANDIDATES: dict[str, tuple] = {}
-
-
-def _candidate(name: str, oracle: str | None = None):
-    def deco(fn):
-        CANDIDATES[name] = (fn, oracle)
-        return fn
-
-    return deco
+from .registry import register
 
 
 # --- 1. cross-source contamination matrix --------------------------------------
 
 
-@_candidate(
+@register(
     "cross_source_contamination_matrix",
     oracle=f"""
     WITH toks AS (
@@ -112,7 +92,7 @@ def cross_source_contamination_matrix(
     their source sets BEFORE any pairing; the self-join is gram-keyed
     with per-gram fanout <= |sources|^2 (bounded by the source count,
     never doc x doc); totals join back on the bounded source key."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.filter(F.col("text").isNotNull())
         .select("source", tokens_col("text").alias("t"))
@@ -170,7 +150,7 @@ def cross_source_contamination_matrix(
 # --- 2. dedup impact report ------------------------------------------------------
 
 
-@_candidate(
+@register(
     "dedup_impact_report",
     oracle=f"""
     WITH base AS (
@@ -243,7 +223,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scrub reuses the shared positional-gram index (one gram-keyed
     shuffle, duplication-bounded coverage explode); the final report is
     two rows crossed with a one-row broadcast."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     base = docs.select(
         "doc_id",
         "text",
@@ -314,7 +294,7 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 3. quality-filter retention by source --------------------------------------
 
 
-@_candidate(
+@register(
     "quality_filter_retention",
     oracle=f"""
     WITH tok AS (
@@ -354,7 +334,7 @@ def quality_filter_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: token explode -> one doc-keyed reduce -> one source-keyed
     reduce; the weight is a pure column expression (no model state)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select(
         "doc_id", "source", F.explode(tokens_col("text")).alias("tok")
     )
@@ -384,7 +364,7 @@ def quality_filter_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 4. Heaps' law fit over per-source vocabularies ------------------------------
 
 
-@_candidate(
+@register(
     "heaps_law_fit",
     oracle="""
     WITH tok AS (
@@ -452,7 +432,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: token explode -> one (source, tok)-keyed distinct/count pass
     -> |sources| points -> one-row moments. The OLS is O(1) after the
     vocabulary count."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = docs.select("source", F.explode(tokens_col("text")).alias("tok"))
     pts = tok.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
@@ -502,7 +482,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OUT_K = 50
 
 
-@_candidate(
+@register(
     "mahalanobis_outlier_topk",
     oracle=f"""
     WITH el AS (
@@ -574,7 +554,7 @@ def mahalanobis_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: posexplode -> ONE shuffle on the 64-value dim key for the
     moments (|dims| rows, broadcast back) -> per-vector reduce ->
     TakeOrderedAndProject for the top-k. No pair expansion anywhere."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     e6 = F.round(F.col("e").cast("double"), 6).cast("decimal(12,6)")
     el = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "e")
@@ -629,7 +609,7 @@ def mahalanobis_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FIM_PCT = 20  # middle-span target percentage of tokens
 
 
-@_candidate(
+@register(
     "fim_split_plan",
     oracle=f"""
     WITH sized AS (
@@ -671,7 +651,7 @@ def fim_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and m_len <= max(1, n/5) <= n - 1.
 
     Scale: pure map-side column math — no shuffle, no explode."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "doc_id", F.size(tokens_col("text")).cast("long").alias("n_tokens")
     ).filter(F.col("n_tokens") >= 2)

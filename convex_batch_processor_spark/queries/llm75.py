@@ -1,7 +1,4 @@
-"""Round-14 pre-flight pack (NOT registered — one pack registers per
-round: llm73 registered at the round-11 close, llm74 registers at the
-round-12 close, so this pack gates through rounds 11-13 and registers at
-the ROUND-13 close, fronting the round-14 window).
+"""Round-14 pack.
 
 The tranche fills the data-mixing / retrieval-eval / dedup-decision gaps
 left after llm72-74: deterministic weighted sampling WITHOUT replacement
@@ -13,8 +10,6 @@ overlap between source rankings, a near-dup threshold decision sweep,
 cross-fold duplicate-leakage accounting, kNN-graph in-degree diagnostics
 (ANN hub detection), and a per-source epoch/budget schedule.
 
-This module is deliberately NOT imported by ``queries/__init__.py``;
-nothing here can reach the driver window or add stale-green debt.
 ``tests/test_r14_preflight.py`` runs every entry through the same
 compare() harness the fixture gates use at sf0.001, a crafted boundary
 fixture, AND sf0.1 (the rounding-tie tier).
@@ -42,23 +37,7 @@ from ..catalog import load_table
 from ..llmops.dedup import tokens_col
 from ..llmops.similarity import cosine_col
 from ..operators.rank import histogram_rank
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# name -> (fn, oracle_sql) — the shape register() consumes at
-# registration time (the llm72/llm73 mechanism).
-CANDIDATES: dict[str, tuple] = {}
-
-
-def _candidate(name: str, oracle: str | None = None):
-    def deco(fn):
-        CANDIDATES[name] = (fn, oracle)
-        return fn
-
-    return deco
+from .registry import register
 
 
 # DuckDB twin of the normalized token array (shared shape with llm73).
@@ -71,7 +50,7 @@ _GUM_K = 10  # sample size per source
 _GUM_DENOM = (1 << 44) + 1  # u = (h44 + 1) / (2^44 + 1) in (0, 1), exact ints
 
 
-@_candidate(
+@register(
     "gumbel_topk_sample",
     oracle=f"""
     WITH base AS (
@@ -116,7 +95,7 @@ def gumbel_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side key computation + one per-source top-k window —
     bounded groups, no global sort, no shuffle beyond the source key."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = (F.coalesce(F.size(tokens_col("text")), F.lit(0)) + 1).cast("long")
     h = F.conv(
         F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":gum"))), 1, 11),
@@ -147,7 +126,7 @@ _QL_MU = 100  # Dirichlet prior mass
 _QL_K = 10
 
 
-@_candidate(
+@register(
     "query_likelihood_topk",
     oracle=f"""
     WITH toks AS (
@@ -201,7 +180,7 @@ def query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — never doc x doc); tf filters to query terms BEFORE its
     shuffle (inverted-index discipline); corpus stats broadcast; the
     top-k is a TakeOrderedAndProject."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokens_col("text").alias("t"))
     dl = toks.select("doc_id", F.size("t").cast("long").alias("dl"))
     corpus = toks.agg(F.sum(F.size("t")).cast("long").alias("total"))
@@ -239,7 +218,7 @@ def query_likelihood_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OOV_VOCAB_K = 10  # vocabulary = top-K corpus terms
 
 
-@_candidate(
+@register(
     "oov_rate_by_source",
     oracle=f"""
     WITH toks AS (
@@ -275,7 +254,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window runs over the (count, n_terms) HISTOGRAM, not
     the vocabulary — the zipf plan shape); the vocab itself is K rows,
     broadcast into a map-side membership probe; one (source) rollup."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select("source", F.explode(tokens_col("text")).alias("term"))
     tc = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     vocab = (
@@ -297,7 +276,7 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUSION_K = 5
 
 
-@_candidate(
+@register(
     "quality_signal_fusion",
     oracle=f"""
     WITH sig AS (
@@ -346,7 +325,7 @@ def quality_signal_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: signals are map-side; four windows all partition by source
     (bounded, uniform groups — no global window, no skew)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sig = (
         docs.select("doc_id", "source", tokens_col("text").alias("t"))
         .filter(F.size("t") >= 1)
@@ -391,7 +370,7 @@ def quality_signal_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 5. deterministic curriculum interleave plan --------------------------------
 
 
-@_candidate(
+@register(
     "curriculum_interleave_plan",
     oracle=f"""
     WITH sized AS (
@@ -436,7 +415,7 @@ def curriculum_interleave_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-source window (bounded groups); the source index and
     count are |sources|-row broadcasts — no global window over docs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id",
         "source",
@@ -478,7 +457,7 @@ def curriculum_interleave_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RBO_P = 0.9
 
 
-@_candidate(
+@register(
     "rbo_ranking_agreement",
     oracle=f"""
     WITH stats AS (
@@ -526,7 +505,7 @@ def rbo_ranking_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the one per-source rollup is
     |sources|-bounded; the two ranking windows run over that bounded
     aggregate (the audited bounded-global-window class)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     stats = docs.groupBy("source").agg(
         F.sum(F.coalesce(F.size(tokens_col("text")), F.lit(0)))
         .cast("long")
@@ -588,7 +567,7 @@ def _sweep_oracle() -> str:
     """
 
 
-@_candidate("neardup_threshold_sweep", oracle=_sweep_oracle())
+@register("neardup_threshold_sweep", oracle=_sweep_oracle())
 def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup THRESHOLD decision sweep: for each candidate Jaccard
     cutoff in (0.5, 0.6, 0.7, 0.8, 0.9) (_SWEEP_THRESHOLDS), the number
@@ -615,7 +594,7 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     five-row literal — negligible."""
     from .llm import ngram_jaccard_pairs
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(spark, sf_dir)
     th = docs.sparkSession.range(1).select(
         F.explode(F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])).alias("threshold")
@@ -641,7 +620,7 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LEAK_FOLDS = 5  # mirrors dataset_split_folds' assignment
 
 
-@_candidate(
+@register(
     "fold_leakage_pairs",
     oracle=f"""
     WITH d AS (
@@ -686,7 +665,7 @@ def fold_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one digest+fold rollup (the exact-dedup shuffle) filtered to
     duplicated digests, then a digest-keyed self-join whose per-digest
     fanout is bounded by _LEAK_FOLDS^2 = 25 — never doc x doc."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     fold = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") % _LEAK_FOLDS
@@ -728,7 +707,7 @@ _KNNG_K = 5
 _KNNG_SAMPLE_MOD = 20  # query side = vec_id % 20 == 0 (deterministic probe set)
 
 
-@_candidate(
+@register(
     "knn_graph_degree_stats",
     oracle=f"""
     WITH nz AS (
@@ -780,7 +759,7 @@ def knn_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the edges come from the ANN path (ivf_assign / banded LSH —
     llmops/similarity.py) and this histogram is unchanged downstream of
     whatever edge set is supplied."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     dot_self = F.aggregate(
         F.col("embedding"),
         F.lit(0.0),
@@ -815,7 +794,7 @@ def knn_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCHED_BUDGET = 1_000_000  # token budget to apportion
 
 
-@_candidate(
+@register(
     "source_epoch_schedule",
     oracle=f"""
     WITH s AS (
@@ -866,7 +845,7 @@ def source_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus rollup to |sources| rows; everything after is
     bounded (the largest-remainder window runs over that table)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.sum(F.coalesce(F.size(tokens_col("text")), F.lit(0)))
         .cast("long")

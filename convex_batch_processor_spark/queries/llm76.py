@@ -1,7 +1,4 @@
-"""Round-15 pre-flight pack (NOT registered — one pack registers per
-round: llm74 registers at the round-12 close, llm75 at the round-13
-close, so this pack gates through rounds 11-14 and registers at the
-ROUND-14 close, fronting the round-15 window).
+"""Round-15 pack.
 
 The tranche is the MEASUREMENT layer for the mixing/dedup/embedding
 operators the earlier packs shipped: a temperature-sweep weight table
@@ -14,8 +11,6 @@ lognormal fit of document lengths (the standard corpus length model),
 and token share by hashed-quality band (what a quality threshold would
 keep, in integer-only band arithmetic).
 
-This module is deliberately NOT imported by ``queries/__init__.py``;
-nothing here can reach the driver window or add stale-green debt.
 ``tests/test_r15_preflight.py`` runs every entry through the same
 compare() harness the fixture gates use at sf0.001, a crafted boundary
 fixture, AND sf0.1 (the rounding-tie tier).
@@ -41,23 +36,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..llmops.dedup import tokens_col
 from ..llmops.similarity import cosine_col
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# name -> (fn, oracle_sql) — the shape register() consumes at
-# registration time (the llm72-75 mechanism).
-CANDIDATES: dict[str, tuple] = {}
-
-
-def _candidate(name: str, oracle: str | None = None):
-    def deco(fn):
-        CANDIDATES[name] = (fn, oracle)
-        return fn
-
-    return deco
+from .registry import register
 
 
 # DuckDB twin of the normalized token array (shared shape with llm73/75).
@@ -69,7 +48,7 @@ _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 _TAUS = (0.25, 0.5, 0.75, 1.0)  # exact binary doubles — pow args identical
 
 
-@_candidate(
+@register(
     "temperature_sweep_weights",
     oracle=f"""
     WITH s AS (
@@ -109,7 +88,7 @@ def temperature_sweep_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus rollup to |sources| rows, then a bounded
     |sources| x |taus| grid — negligible."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.sum(F.coalesce(F.size(tokens_col("text")), F.lit(0)))
         .cast("long")
@@ -141,7 +120,7 @@ def temperature_sweep_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANISO_MOD = 20  # probe sets: vec_id % 20 == 0 and % 20 == 10
 
 
-@_candidate(
+@register(
     "embedding_anisotropy_probe",
     oracle=f"""
     WITH nz AS (
@@ -198,7 +177,7 @@ def embedding_anisotropy_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the probe product is (n/20)^2 — the documented verification
     baseline; at 100 TB feed the probe sets from a fixed sample rate and
     the means are unchanged downstream."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     dot_self = F.aggregate(
         F.col("embedding"),
         F.lit(0.0),
@@ -247,7 +226,7 @@ def embedding_anisotropy_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 3. label separation report ---------------------------------------------------
 
 
-@_candidate(
+@register(
     "label_separation_report",
     oracle="""
     WITH el AS (
@@ -301,7 +280,7 @@ def label_separation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (label, dim) rollup for centroids (bounded, broadcast
     back), one corpus pass for the scatter, and a |labels|^2 x dims
     centroid grid — bounded by the label count."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     e6 = F.round(F.col("e").cast("double"), 6).cast("decimal(12,6)")
     el = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "e")
@@ -378,7 +357,7 @@ def _cluster_sizes_oracle() -> str:
     """
 
 
-@_candidate("neardup_cluster_sizes", oracle=_cluster_sizes_oracle())
+@register("neardup_cluster_sizes", oracle=_cluster_sizes_oracle())
 def neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER-SIZE histogram: how many duplicate components
     exist at each size, and how many documents they hold — the dedup
@@ -437,7 +416,7 @@ def _efficiency_oracle() -> str:
     """
 
 
-@_candidate("minhash_candidate_efficiency", oracle=_efficiency_oracle())
+@register("minhash_candidate_efficiency", oracle=_efficiency_oracle())
 def minhash_candidate_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding efficiency: how many candidate pairs the portable
     MinHash banding (16 perms, 4 bands of 4 — minhash_portable_neardup's
@@ -457,7 +436,7 @@ def minhash_candidate_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification."""
     from ..llmops.dedup import MD5, jaccard_pairs, minhash_candidates
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     cands, sh_raw = minhash_candidates(docs, num_perm=16, family=MD5)
     cands = cands.persist()  # two consumers: the count + the verify join
     ver = jaccard_pairs(docs, cands, shingle_df=sh_raw).filter(
@@ -478,7 +457,7 @@ def minhash_candidate_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 6. per-source lognormal fit of document lengths ---------------------------------
 
 
-@_candidate(
+@register(
     "doc_length_lognormal_fit",
     oracle=f"""
     WITH sized AS (
@@ -518,7 +497,7 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the honest float answer both engines agree on).
 
     Scale: map-side lengths + one |sources| rollup."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     sized = docs.select(
         "source", F.size(tokens_col("text")).cast("long").alias("n")
     ).filter(F.col("n") >= 1)
@@ -546,7 +525,7 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BAND_DENOM = 1_000_000  # hashed weights read at scale 1e-6 (llm73 contract)
 
 
-@_candidate(
+@register(
     "quality_band_token_share",
     oracle=f"""
     WITH toks AS (
@@ -608,7 +587,7 @@ def quality_band_token_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar."""
     from .llm73 import hashed_token_weight
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
         F.size("t") >= 1
     )

@@ -24,10 +24,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # SCD Type-2 history build
 # ---------------------------------------------------------------------------
@@ -78,7 +74,7 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     key on user_id (uniform), window state is per-user O(1); no global
     window anywhere.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc()
     )
@@ -156,7 +152,7 @@ def gapfill_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized, independent of event volume); the only corpus-scale work is
     the first (type, day) rollup. The span side is broadcast.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -241,7 +237,7 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..llmops.dedup import winnow_fingerprints
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # persisted: e feeds inv, ea, AND eb with no common exchange to reuse —
     # unpersisted, the tokenize+md5-k-gram+winnow pipeline re-runs over the
     # full corpus three times (the dup_span_coverage multi-consumer class).
@@ -321,11 +317,11 @@ def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension). Metrics are exact-integer ratios so the report is
     bit-reproducible across engines and retries.
     """
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    docs = _t(spark, sf_dir, "documents")
-    cust = _t(spark, sf_dir, "customer")
+    ev = load_table(spark, sf_dir, "events")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    docs = load_table(spark, sf_dir, "documents")
+    cust = load_table(spark, sf_dir, "customer")
     known = ["view", "click", "purchase", "signup", "error"]
 
     def row(name, entity, metric, passed):
@@ -420,7 +416,7 @@ def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded up front (A-ES is defined for w > 0; a zero weight would be
     a divide-by-zero under ANSI).
     """
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     u = (
         F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 13), 16, 10).cast(
             "long"
@@ -485,7 +481,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (approx_stats) is the scale form. 3x-MAD comparison is exact integer
     arithmetic widened to binary halves (no epsilon).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     c = ev.filter(F.col("value").isNotNull()).select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("vc"),
@@ -587,7 +583,7 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     as kmeans centroids. For billion-node graphs the iteration joins
     shuffle on dst instead (large-star/small-star in operators/graph.py
     shows the O(log n) variant)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc_nulls_first(), F.col("event_id").asc()
     )

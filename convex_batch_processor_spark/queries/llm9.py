@@ -24,10 +24,6 @@ from .registry import register
 _TOK_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # RAG chunking with overlap
 # ---------------------------------------------------------------------------
@@ -70,7 +66,7 @@ def rag_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5)."""
     from ..llmops.dedup import tokens_col
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("t"))
     g = (
         toks.filter(F.size("t") > 0)
@@ -133,7 +129,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window top-k; query set is bounded. For full-corpus mining (every
     vector a query), swap the broadcast for the IVF/LSH bucketed paths
     (ivf_search_topk / lsh_ann_probe) with the same label filter."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").isin(_HN_QUERIES)).select(
         F.col("vec_id").alias("q_vec_id"),
         F.col("embedding").alias("q_vec"),
@@ -194,7 +190,7 @@ def label_balance_undersample(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant class lands on one task: pre-filter with a per-partition
     top-target heap via the skew-salting helpers if a class is corpus-
     sized)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     tgt = (
         emb.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -253,7 +249,7 @@ def time_decay_user_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side weighting + one user-keyed sum; the reference date is
     a broadcast scalar."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ref = ev.agg(F.max(F.col("ts").cast("date")).alias("r"))
     age = F.datediff(F.col("r"), F.col("ts").cast("date"))
     return (
@@ -311,7 +307,7 @@ def dataset_split_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     balanced.
 
     Map-side assignment + one bounded {_FOLDS}-group rollup."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     fold = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") % _FOLDS

@@ -13,10 +13,6 @@ from ..catalog import load_table, register_views
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "sql_api_revenue_by_nation",
     oracle="""
@@ -59,7 +55,7 @@ def sql_api_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unpivot_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (stack): wide per-lang metrics → (lang, metric, value) rows."""
     wide = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
     )
@@ -86,7 +82,7 @@ def date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date arithmetic pack: add days/months, diffs, boundaries, parts.
     (dow normalized to Spark's 1=Sunday convention in the oracle.)"""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 150)
         .select(
             "o_orderkey",
@@ -122,7 +118,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar pack (F2/F3 generalized): case, pad, replace, find,
     reverse, slice, concat — all codegen'd."""
     return (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < 100)
         .select(
             "c_custkey",

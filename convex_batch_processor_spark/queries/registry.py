@@ -79,30 +79,3 @@ def dsum_expr(expr: Column, alias: str) -> Column:
     """Exact sum of an already-decimal expression, as double."""
     return F.sum(expr).cast("double").alias(alias)
 
-
-def prioritize(names: list[str]) -> None:
-    """Rebuild the registry order with ``names`` FIRST (in the given
-    order), everything else following in its current order.
-
-    The round driver verifies the FIRST 50 registry entries, so rotation
-    has so far been done by re-ordering module imports — which breaks
-    down when single queries must move out of a large module (and which
-    made cross-module constant imports order-hazardous, NOTES.md).
-    Calling this once at the END of queries/__init__.py expresses the
-    window explicitly and safely. Unknown names raise (a typo would
-    silently burn a window slot).
-    """
-    missing = [n for n in names if n not in QUERIES]
-    if missing:
-        raise KeyError(f"prioritize: unknown queries {missing}")
-    dupes = sorted({n for n in names if names.count(n) > 1})
-    if dupes:
-        # a repeated name would silently collapse in the dict build,
-        # shrinking the driver-verified first-50 window by one slot —
-        # the exact silent-slot-burn this function exists to prevent
-        raise ValueError(f"prioritize: duplicate queries {dupes}")
-    front = {n: QUERIES[n] for n in names}
-    rest = {n: s for n, s in QUERIES.items() if n not in front}
-    QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(rest)

@@ -16,10 +16,6 @@ from ..operators import relational as R
 from .registry import DEC, DEC_SMALL, davg, dec, dsum, dsum_expr, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship: TPC-H-Q1-style pricing summary (scan + filter + hash agg + sort)
 # ---------------------------------------------------------------------------
@@ -53,7 +49,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     7 referenced columns are read); partial aggregation happens map-side, so
     the shuffle carries ~|groups| rows per partition, not the fact table.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     one = F.lit(1).cast(DEC_SMALL)
     disc_price = dec("l_extendedprice") * (one - dec("l_discount", DEC_SMALL))
     charge = disc_price * (one + dec("l_tax", DEC_SMALL))
@@ -85,7 +81,7 @@ def s1_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: indexed equality point lookup (reference lib.ts:45-50 withIndex
     .eq().first()). The predicate reaches the parquet scan (PushedFilters),
     which at scale becomes row-group/partition pruning, not a table scan."""
-    return R.point_lookup(_t(spark, sf_dir, "orders"), o_orderkey=42)
+    return R.point_lookup(load_table(spark, sf_dir, "orders"), o_orderkey=42)
 
 
 @register(
@@ -100,7 +96,7 @@ def s2_snapshot_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: composite-index range scan — equality prefix + createdAt < cutoff
     (the snapshot-cutoff flush read, lib.ts:366-371). Both predicates and the
     4-column projection push into the scan."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter((F.col("l_orderkey") <= 199) & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")))
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")
@@ -114,7 +110,7 @@ def s2_snapshot_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s3_key_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3: full-index collect — all rows for a key set (lib.ts:151-154 et al).
     IN-list pushes down as an OR-of-equals filter."""
-    return _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey").isin(1, 2, 3, 5, 8, 13, 21, 34))
+    return load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey").isin(1, 2, 3, 5, 8, 13, 21, 34))
 
 
 @register(
@@ -130,7 +126,7 @@ def p1_projection_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a subset of fields into a client shape (lib.ts:915-923). Column pruning
     means only 4 of 6 columns are read from parquet."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 500)
         .select(
             F.col("o_orderkey").alias("job_id"),
@@ -162,7 +158,7 @@ def p4_status_guard_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("batch_status")
     )
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(status)
         .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice", "total"))
     )
@@ -187,7 +183,7 @@ def p4_status_guard_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p5_batch_id_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5+P6: compose `base::seq` ids then parse them back (lib.ts:62 concat;
     lib.ts:40-42 split) — pure string codegen, no UDF."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bid = R.make_batch_id(F.col("event_type"), F.col("event_id"))
     df = ev.select(bid.alias("bid"))
     df = R.parse_batch_id(df, "bid")
@@ -226,8 +222,8 @@ def j1_per_key_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side to one row per order; joining raw rows then grouping would shuffle
     the whole fact table twice. AQE may then broadcast the compact side.
     """
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     joined = R.per_key_agg_join(
         orders.select("o_orderkey", "o_orderstatus"),
         li,
@@ -259,9 +255,9 @@ def j1_per_key_agg_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j2_semi_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (exists): left-semi join — the duplicate-jobId existence probe
     (lib.ts:749-756) generalized: customers having a >450k order."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 450000)
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -279,9 +275,9 @@ def j2_semi_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j2_anti_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (not exists): left-anti join — the reuse-or-create probe
     (lib.ts:45-53): customers with no large (>400k) order."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 400000)
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -303,7 +299,7 @@ def a3_next_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: next-sequence allocation — MAX(sequence)+1 per base id
     (lib.ts:55-62's desc-order .first() then +1), as a hash aggregate."""
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("base_key"))
         .agg((F.max("event_id") + 1).alias("next_seq"), F.count(F.lit(1)).alias("n_epochs"))
     )
@@ -324,7 +320,7 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped aggregate + HAVING (the reference's empty-group short-circuit
     lib.ts:157-159 generalized to a post-aggregation guard)."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum("l_quantity", "sum_qty"))
         .filter(F.col("sum_qty") > 15300)
@@ -344,7 +340,7 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (expand + two-phase agg in Spark)."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
             F.countDistinct("l_partkey").alias("distinct_parts"),
@@ -373,7 +369,7 @@ def w1_retention_doomed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the doomed rest (cleanupOldBatches, lib.ts:671-692). The engine's
     DELETE is an anti-join against this set (S11). event_id is the unique
     tiebreak (the adversarial fixture crafts equal-ts pairs)."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     return R.retention_doomed(ev, ["user_id"], ["ts", "event_id"], keep=1)
 
 
@@ -390,7 +386,7 @@ def w1_retention_doomed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w2_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: latest-row-per-key (the desc .first() at lib.ts:55-59);
     event_id tiebreak for a deterministic row on ts ties."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type", "value")
     return R.latest_per_key(ev, ["user_id"], ["ts", "event_id"])
 
 
@@ -411,7 +407,7 @@ def o2_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark compiles this to TakeOrderedAndProject — per-partition k-row heaps
     merged at the driver; no global sort at any scale. o_orderkey tiebreak
     makes the row set deterministic."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     return R.top_k(
         orders, [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()], 10
     )
@@ -431,7 +427,7 @@ def o2_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group (window rank ≤ k): each customer's 3 biggest orders
     (o_orderkey asc tiebreak)."""
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
     return R.top_k_per_group(
         orders, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()], 3
     )
@@ -455,7 +451,7 @@ def u1_union_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: order-significant concat of two filtered views — the reference
     returns flushing ∪ accumulating batches in one list (lib.ts:190-204).
     unionByName; the hash comparison is order-insensitive anyway."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
 
     def view(status: str, phase: str) -> DataFrame:
         return orders.filter(F.col("o_orderstatus") == status).select(
@@ -479,7 +475,7 @@ def u1_union_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u2_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: flatten/unnest an array column across rows — the reference's
     items.push(...doc.items) flatten (lib.ts:374-378) as explode + count."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -498,7 +494,7 @@ def u2_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: customers active in both 1995 and 1996."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     y95 = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     y96 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
     return y95.intersect(y96)
@@ -514,7 +510,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT: customers active in 1995 but not 1996."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     y95 = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     y96 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
     return y95.subtract(y96)
@@ -534,7 +530,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f4_backoff_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: the retry backoff expression min(1000*2^n, 30000) (lib.ts:1059)
     as a vectorized column over derived retry counts."""
-    retries = _t(spark, sf_dir, "events").select((F.col("event_id") % 8).alias("retry")).distinct()
+    retries = load_table(spark, sf_dir, "events").select((F.col("event_id") % 8).alias("retry")).distinct()
     return retries.withColumn(
         "backoff_ms",
         F.least(F.lit(30000).cast("double"), F.lit(1000) * F.pow(F.lit(2), F.col("retry"))).cast("bigint"),
@@ -561,7 +557,7 @@ def scalar_datetime_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     string slice/case, math round/abs, greatest (lib.ts:223 Math.max,
     lib.ts:1059 Math.min) — all codegen'd, no UDFs."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 200)
         .select(
             "o_orderkey",
@@ -613,7 +609,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-directed from_json per row — JVM-side, no Python. (The
     get_json_object form re-parses the document once per referencing
     aggregate; one typed parse in a projection halves the JSON work.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     parsed = ev.select(
         "event_type", F.from_json("props", "k BIGINT").getField("k").alias("k")
     )

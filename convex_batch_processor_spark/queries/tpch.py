@@ -18,10 +18,6 @@ from ..catalog import load_table, register_views
 from .registry import DEC_SMALL, dec, dsum_expr, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _REVENUE = "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
 
 
@@ -68,7 +64,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: highly-selective scan + global aggregate — the
     pushdown showcase (all four predicates reach the parquet reader; the
     aggregate is a single map-side partial + 1-row final)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -167,11 +163,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ship month). One fact-dim join — part is the small side and
     broadcasts — then a single global aggregate computing numerator and
     denominator in the same pass (no second scan for the ratio)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = _revenue_col()
     zero = F.lit(0).cast("decimal(18,2)")
     return (
@@ -284,12 +280,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase volume per year — two roles for the nation dimension plus a
     conditional-ratio aggregate per group. All dimensions broadcast; the
     lineitem↔orders shuffle is the only large exchange."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n1 = nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
     n2 = nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     rev = _revenue_col()
@@ -331,11 +327,11 @@ def q4_priority_with_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS-filtered aggregate — orders with at least one
     line shipped >60 days after ordering, counted by priority (semi join,
     no row multiplication before the group-by)."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -375,11 +371,11 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity holds without nesting decimals past Spark's precision cap. The
     LIKE filter prunes part before the join; part/supplier/nation
     broadcast, lineitem↔orders is the one big shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     cost = dec("p_retailprice") * dec("l_quantity")
     return (
         li.join(F.broadcast(part), part.p_partkey == li.l_partkey)
@@ -454,8 +450,8 @@ def q12_shipping_delay_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shipmode column). One fact↔fact equi-join with the date filter
     pushed to the lineitem scan; the CASE aggregation computes both
     branches in a single pass."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("l_orderkey", "l_shipdate")
@@ -494,8 +490,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently drop the zero bucket). COUNT(o_orderkey) counts non-nulls, so
     unmatched customers land in c_count=0; the second aggregate is over
     ~distinct-count rows — tiny."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
     per_cust = (
         cust.join(
             orders,
@@ -539,8 +535,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     common sub-predicates it can push below the join (brand/size terms to
     the part scan, the quantity range union to lineitem) and evaluates the
     residual OR above the broadcast join — one pass, no union-of-three-scans."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), part.p_partkey == li.l_partkey)
     cond = None
     for brand, size_hi, (q_lo, q_hi) in _Q19_BRANCHES:
@@ -615,9 +611,9 @@ def q22_dormant_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the orders scan. Average is exact-sum/count so the > boundary
     cannot drift between engines."""
     cntries = [7, 13, 17, 19, 23]
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(cntries))
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(cntries))
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
         .select("o_custkey")
     )

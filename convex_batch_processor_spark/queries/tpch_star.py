@@ -1,13 +1,8 @@
 """TPC-H star-join showcases (q3/q5/q10/q18/q7) — the multi-way
 broadcast-chain shapes.
 
-Historical split from tpch.py (round 1, when registration order decided
-the driver window). The window is now rebuilt explicitly by
-``prioritize()`` in queries/__init__.py each round — module order no
-longer schedules anything; all five of these queries are, for example,
-deliberately INSIDE the round-8 first-50 window as r1-verdict
-stale-green re-queues. The local gate (tests/oracle_check.py) runs them
-every time regardless.
+Split from tpch.py; the oracle gate (tests/oracle_check.py) runs them
+with the rest of the registry.
 """
 
 from __future__ import annotations
@@ -15,8 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import load_table
 from .registry import dec, dsum_expr, register
-from .tpch import _REVENUE, _revenue_col, _t
+from .tpch import _REVENUE, _revenue_col
 
 
 @register(
@@ -41,11 +37,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped revenue, top-10. Customer side is small after the segment
     filter → broadcast; the orders↔lineitem join shuffles on orderkey with
     both filters pushed to the scans."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     return (
@@ -80,15 +76,15 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way star join with a same-nation constraint.
     region→nation→supplier prune to a broadcast chain; the only big
     exchange is lineitem↔orders."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
@@ -120,13 +116,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: returned-item revenue per customer, top-20."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
@@ -155,9 +151,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: large-volume orders (HAVING over a join-group)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
@@ -190,13 +186,13 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bidirectional nation-pair trade volume — two
     aliases of the same dimension joined against both fact sides."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between("1996-01-01", "1997-12-31 00:00:00")
     )
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    supp = load_table(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     n1 = nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     n2 = nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
     pair = (

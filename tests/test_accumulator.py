@@ -8,13 +8,14 @@ callback, audit history, failure retry."""
 from __future__ import annotations
 
 import pytest
-
-# slow tier: excluded from the default run (pytest.ini); run with -m ""
-pytestmark = pytest.mark.slow
 from pyspark.sql import types as T
 
 from convex_batch_processor_spark.sources.registry import HandleRegistry
 from convex_batch_processor_spark.streaming.accumulator import BatchAccumulator
+
+# @pytest.mark.slow tests are excluded from the default run (pytest.ini;
+# run them with -m ""); the one unmarked test keeps the accumulator in the
+# default tier.
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -41,6 +42,7 @@ def events(n, start=0):
     return [{"event_name": f"e{i}", "user_id": i % 3, "value": float(i)} for i in range(start, start + n)]
 
 
+@pytest.mark.slow
 def test_flush_delivers_all_staged_items(spark, tmp_path):
     reg = HandleRegistry()
     seen = []
@@ -62,6 +64,7 @@ def test_flush_delivers_all_staged_items(spark, tmp_path):
     assert sum(h.item_count for h in hist) == 8
 
 
+@pytest.mark.slow
 def test_flush_with_no_staging_is_noop(spark, tmp_path):
     reg = HandleRegistry()
     reg.add("collect_events", lambda df, e: None)
@@ -69,6 +72,7 @@ def test_flush_with_no_staging_is_noop(spark, tmp_path):
     assert acc.flush_now() is False  # "no batch" early-out (lib.ts:141-148)
 
 
+@pytest.mark.slow
 def test_epoch_isolation_and_carryover(spark, tmp_path):
     """D3/D4: items staged after a flush belong to the NEXT epoch."""
     reg = HandleRegistry()
@@ -89,6 +93,7 @@ def test_epoch_isolation_and_carryover(spark, tmp_path):
     assert epochs[new_epochs.pop()] == ["e100", "e101"]
 
 
+@pytest.mark.slow
 def test_size_threshold_splits_epochs(spark, tmp_path):
     """D1 size trigger: admission control closes an epoch per N staged adds."""
     reg = HandleRegistry()
@@ -132,6 +137,7 @@ def test_failed_flush_retries_same_epoch_at_least_once(spark, tmp_path):
     assert "user handler exploded" in err[0]
 
 
+@pytest.mark.slow
 def test_status_view(spark, tmp_path):
     reg = HandleRegistry()
     reg.add("collect_events", lambda df, e: None)
@@ -147,6 +153,7 @@ def test_status_view(spark, tmp_path):
     assert st["last_flush_at"] is not None
 
 
+@pytest.mark.slow
 def test_continuous_start_processes_adds(spark, tmp_path):
     """D1 time path: the long-running interval-triggered stream picks up
     items staged while it is live (processAllAvailable forces the epochs
@@ -175,6 +182,7 @@ def test_continuous_start_processes_adds(spark, tmp_path):
     assert sum(h.item_count for h in hist if h.success) == 5
 
 
+@pytest.mark.slow
 def test_vacuum_staging_removes_only_committed_files(spark, tmp_path):
     """D8: flushed (committed) staging files are deleted; files staged
     after the flush survive, and a re-flush still sees only them."""
@@ -199,6 +207,7 @@ def test_vacuum_staging_removes_only_committed_files(spark, tmp_path):
     assert sorted(seen) == ["e100", "e101"]  # offsets unaffected by vacuum
 
 
+@pytest.mark.slow
 def test_epoch_bookkeeping_survives_source_log_compaction(spark, tmp_path):
     """FileStreamSource rewrites every compactInterval-th batch's log as
     'N.compact' (cumulative entries, plain files cleaned up later), so

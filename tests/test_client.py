@@ -5,14 +5,15 @@ accumulation + users migration iterator)."""
 from __future__ import annotations
 
 import pytest
-
-# slow tier: excluded from the default run (pytest.ini); run with -m ""
-pytestmark = pytest.mark.slow
 from pyspark.sql import types as T
 
 from convex_batch_processor_spark.catalog import load_table
 from convex_batch_processor_spark.client import BatchProcessor
 from convex_batch_processor_spark.sources.registry import HandleRegistry
+
+# @pytest.mark.slow tests are excluded from the default run (pytest.ini;
+# run them with -m ""); the one unmarked test keeps the facade in the
+# default tier.
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -22,6 +23,7 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
+@pytest.mark.slow
 def test_analytics_events_scenario(spark, tmp_path):
     """README accumulator walkthrough: track events, flush at threshold,
     inspect status + history."""
@@ -51,6 +53,7 @@ def test_analytics_events_scenario(spark, tmp_path):
     assert hist and all(h.success for h in hist)
 
 
+@pytest.mark.slow
 def test_users_migration_scenario(spark, sf_dir, tmp_path):
     """README iterator walkthrough: migrate all users in batches with
     progress, pause/resume, completion callback."""
@@ -85,6 +88,7 @@ def test_users_migration_scenario(spark, sf_dir, tmp_path):
     assert bp.delete_iterator_job("user-migration-2024") is True
 
 
+@pytest.mark.slow
 def test_optimistic_flush_returns_before_running(spark, tmp_path):
     """flush(block=False) parity with the reference's scheduled flush
     (lib.ts:167-177): returns True immediately; the flush lands on a
@@ -101,6 +105,7 @@ def test_optimistic_flush_returns_before_running(spark, tmp_path):
     assert bp.get_batch_status("opt")["flushed_items"] == 25
 
 
+@pytest.mark.slow
 def test_facade_guards(spark, tmp_path):
     bp = BatchProcessor(spark=spark, root=str(tmp_path))
     with pytest.raises(KeyError, match="no accumulator"):
@@ -110,6 +115,7 @@ def test_facade_guards(spark, tmp_path):
     assert bp.list_iterator_jobs() == []
 
 
+@pytest.mark.slow
 def test_facade_sees_persisted_jobs_across_instances(spark, sf_dir, tmp_path):
     """Job state survives a driver restart: a NEW BatchProcessor over the
     same root can list/inspect/pause/resume and (after attach) drive jobs
@@ -142,6 +148,7 @@ def test_facade_sees_persisted_jobs_across_instances(spark, sf_dir, tmp_path):
     assert sorted(seen) == sorted(r.c_custkey for r in customers.collect())
 
 
+@pytest.mark.slow
 def test_facade_short_doc_dedup_does_not_crash(spark, tmp_path):
     """Regression (code-review finding): 1-2 token documents must not kill
     the shingle/dedup pipeline."""
@@ -223,6 +230,7 @@ def test_get_all_batches_and_delete_batch_lifecycle(spark, tmp_path):
     assert bp.delete_batch("events::7") == {"deleted": False, "reason": "Batch not found"}
 
 
+@pytest.mark.slow
 def test_delete_empty_accumulating_batch_hides_until_items_return(spark, tmp_path):
     """Review r7: deleting the EMPTY accumulating batch must behave like
     the reference's doc delete — the batch disappears from the listing,
@@ -261,6 +269,7 @@ def test_delete_empty_accumulating_batch_hides_until_items_return(spark, tmp_pat
     ]
 
 
+@pytest.mark.slow
 def test_delete_and_list_agree_on_zero_row_staged_files(spark, tmp_path):
     """ADVICE r7: delete_batch and list_batches must share ONE emptiness
     predicate (zero ROWS, not zero files). A zero-row staged parquet —
@@ -299,6 +308,7 @@ def test_delete_and_list_agree_on_zero_row_staged_files(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_empty_accumulating_batch_reports_concrete_timestamps(spark, tmp_path):
     """An empty accumulating batch (no staged files, no flush-history
     row for its sequence) must still carry concrete created_at /
@@ -322,6 +332,7 @@ def test_empty_accumulating_batch_reports_concrete_timestamps(spark, tmp_path):
         assert b["last_updated_at"] is not None, b
 
 
+@pytest.mark.slow
 def test_delete_batch_refuses_while_flush_pending_retry(spark, tmp_path):
     """An admitted-but-uncommitted epoch (failed flush awaiting its
     at-least-once retry) maps to the reference's 'flushing' guard
@@ -354,6 +365,7 @@ def test_delete_batch_refuses_while_flush_pending_retry(spark, tmp_path):
     assert bp.delete_batch("ev::0") == {"deleted": True}
 
 
+@pytest.mark.slow
 def test_failed_start_iterator_preserves_attached_iterator(spark, sf_dir, tmp_path):
     """A duplicate-id start_iterator raises from it.start(); the facade
     must NOT have installed the new (wrong-source/wrong-key) iterator
@@ -381,6 +393,7 @@ def test_failed_start_iterator_preserves_attached_iterator(spark, sf_dir, tmp_pa
     assert st.processed_count == customers.count()
 
 
+@pytest.mark.slow
 def test_background_flush_records_config_errors(spark, tmp_path):
     """flush(block=False) with an unregistered handle fails BEFORE any
     epoch runs; the failure must still land in flush_history (the

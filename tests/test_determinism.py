@@ -1,5 +1,5 @@
-"""Partition-invariance for the round-5 driver window (first 50 registry
-entries — the only queries whose first driver contact is still ahead).
+"""Partition-invariance for the 50-query window pinned in
+tests/test_registry_window.py.
 
 The local oracle gate runs at 8 shuffle partitions; the driver's session
 config is unknown. A query whose result depends on partition count or
@@ -21,11 +21,10 @@ import pytest
 from convex_batch_processor_spark.queries import QUERIES
 
 from .determinism_check import check_partition_invariance
+from .test_registry_window import _R12_WINDOW
 
-_WINDOW = list(QUERIES)[:50]
 
-
-@pytest.mark.parametrize("name", _WINDOW)
+@pytest.mark.parametrize("name", _R12_WINDOW)
 def test_window_query_is_partition_invariant(spark, sf_dir, name):
     ok, detail = check_partition_invariance(spark, sf_dir, QUERIES[name].fn)
     assert ok, f"{name}: {detail}"

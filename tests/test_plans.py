@@ -14,6 +14,8 @@ from convex_batch_processor_spark.catalog import load_table
 from convex_batch_processor_spark.plans import explain as E
 from convex_batch_processor_spark.queries import QUERIES
 
+from .test_registry_window import _R12_WINDOW
+
 
 def q(spark, sf_dir, name):
     return QUERIES[name].fn(spark, sf_dir)
@@ -461,9 +463,9 @@ def test_dedup_eval_truth_join_has_no_cartesian(spark, sf_dir):
 
 
 def test_current_window_global_windows_are_bounded(spark, sf_dir):
-    """Plan gate over the ENTIRE live driver window (the first 50
-    registry entries — VERDICT r4 #7; UPDATE the `allowed` pins when
-    rotating): no CartesianProduct, and no unpartitioned WindowExec.
+    """Plan gate over the 50-query window pinned in
+    tests/test_registry_window.py (VERDICT r4 #7): no CartesianProduct,
+    and no unpartitioned WindowExec.
     The round-12 window has two audited bounded global windows
     (measured at the swap via global_window_inputs; each runs over a
     bounded aggregate — the 150-row negative-sampling vocabulary's
@@ -474,9 +476,7 @@ def test_current_window_global_windows_are_bounded(spark, sf_dir):
         "rrf_fusion_topk": {"doc_id", "score"},
     }
     allowed_cartesian: set[str] = set()
-    names = list(QUERIES)[:50]
-    assert len(names) == 50
-    for name in names:
+    for name in _R12_WINDOW:
         df = QUERIES[name].fn(spark, sf_dir)
         if name not in allowed_cartesian:
             assert "CartesianProduct" not in E.physical_plan(df), name
@@ -490,8 +490,7 @@ def test_current_window_global_windows_are_bounded(spark, sf_dir):
 
 
 def test_full_registry_no_new_cartesians_or_global_windows(spark, sf_dir):
-    """Ratchet over the ENTIRE 291-query registry (rounds 6-7 material
-    included, ahead of the rotation): the ONLY CartesianProducts are the
+    """Ratchet over the ENTIRE registry: the ONLY CartesianProducts are the
     two histogram x histogram DP queries (bounded ~|bins|^2 by design),
     and the ONLY queries with unpartitioned WindowExecs are the audited
     set below — each runs its global window over a bounded aggregate
@@ -518,6 +517,13 @@ def test_full_registry_no_new_cartesians_or_global_windows(spark, sf_dir):
         # llm72 pack (registered late r10): reverse-cumulative risk set
         # over the bounded |distinct tenure-days| histogram
         "tenure_hazard_table",
+        # llm74/llm75 packs: top-k rank over the LIMIT-bounded outlier
+        # head, and windows over |sources| rankings or the vocab
+        # histogram (bounded by test_llm74_plan_shapes and the r14
+        # test_preflight_plan_shapes)
+        "mahalanobis_outlier_topk", "oov_rate_by_source",
+        "curriculum_interleave_plan", "rbo_ranking_agreement",
+        "source_epoch_schedule",
     }
     for name, spec in QUERIES.items():
         df = spec.fn(spark, sf_dir)

@@ -1,13 +1,9 @@
-"""Oracle parity for the llm72 pack (built as the round-11 pre-flight,
-registered late round 10 when the stale backlog cleared and the
-registry freeze lifted).
+"""Oracle parity for the round-11 pack (queries/llm72.py).
 
 This file runs each entry through the SAME compare() harness the
-driver-window fixture gates use, at sf0.001, a crafted boundary
-fixture, AND sf0.1 (the rounding-tie tier) — the pack shipped two
-rounds of this before taking a driver slot. A registration test pins
-that all 12 are registered with their pre-flighted oracles and sit
-OUTSIDE the round-10 driver window.
+driver-window fixture gates use, at a crafted boundary fixture AND
+sf0.1 (the rounding-tie tier); tests/test_oracle_parity.py covers
+sf0.001.
 """
 
 from __future__ import annotations
@@ -26,7 +22,12 @@ import duckdb  # noqa: E402
 
 from oracle_check import compare  # noqa: E402
 
-from convex_batch_processor_spark.queries.llm72 import CANDIDATES  # noqa: E402
+from convex_batch_processor_spark.queries import QUERIES  # noqa: E402
+
+CANDIDATES = {
+    n: (s.fn, s.oracle) for n, s in QUERIES.items()
+    if s.fn.__module__.endswith(".llm72")
+}
 
 
 # Rows-only by documented contract (an inherently sequential loop and a
@@ -35,32 +36,11 @@ from convex_batch_processor_spark.queries.llm72 import CANDIDATES  # noqa: E402
 _ROWS_ONLY = {"pack_best_fit_decreasing", "zca_whitening_matrix"}
 
 
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
-def test_preflight_parity(spark, sf_dir, name):
-    fn, oracle = CANDIDATES[name]
-    assert oracle or name in _ROWS_ONLY, (
-        f"{name}: pre-flight candidates must be oracle-backed or in the "
-        "documented rows-only set")
-    ok, detail = compare(spark, sf_dir, name, fn, oracle)
-    assert ok, f"{name}: {detail}"
-
-
 def test_preflight_pack_registered_with_preflighted_oracles():
-    """Registered late r10 (freeze lift); the 10 oracle-backed candidates
-    fronted the ROUND-11 driver window per NOTES "Round-11 rotation plan"
-    (verdicts recorded that round), and the window has since rotated past
-    them (NOTES "Round-12 rotation plan" — test_registry_window.py pins
-    the current rotation). What must stay true regardless of rotation:
-    all 12 remain registered with exactly their pre-flighted (fn, oracle)
-    pairs, and the two rows-only candidates never take a window slot —
-    a rows-only slot records no hash verdict and would be wasted."""
-    from convex_batch_processor_spark.queries import QUERIES
-
-    window = set(list(QUERIES)[:50])
+    """Only the documented two llm72 queries are rows-only; every other
+    one is registered with its DuckDB oracle."""
     for name, (fn, oracle) in CANDIDATES.items():
         assert name in QUERIES, name
-        if oracle is None:
-            assert name not in window, name
         assert QUERIES[name].fn is fn, name
         assert QUERIES[name].oracle == oracle, name
     rows_only = {n for n in CANDIDATES if CANDIDATES[n][1] is None}

@@ -1,12 +1,9 @@
-"""Oracle parity for the round-12 pre-flight pack (queries/llm73.py).
+"""Oracle parity for the round-12 pack (queries/llm73.py).
 
-One pack registers per round (round 10 registered llm72), so these
-candidates are NOT registered — this file runs each one through the
-SAME compare() harness the driver-window fixture gates use, at sf0.001,
-a crafted boundary fixture, AND sf0.1 (the rounding-tie tier), so that
-when the pack registers (round-11 close, fronting the round-12 window)
-it has already shipped green for a full round. A pinned test enforces
-the non-registration until then.
+This file runs each entry through the SAME compare() harness the
+driver-window fixture gates use, at a crafted boundary fixture AND
+sf0.1 (the rounding-tie tier); tests/test_oracle_parity.py covers
+sf0.001.
 """
 
 from __future__ import annotations
@@ -25,7 +22,12 @@ import duckdb  # noqa: E402
 
 from oracle_check import compare  # noqa: E402
 
-from convex_batch_processor_spark.queries.llm73 import CANDIDATES  # noqa: E402
+from convex_batch_processor_spark.queries import QUERIES  # noqa: E402
+
+CANDIDATES = {
+    n: (s.fn, s.oracle) for n, s in QUERIES.items()
+    if s.fn.__module__.endswith(".llm73")
+}
 
 # Rows-only by documented contract (PAVA pooling is an inherently
 # sequential scan over the bounded histogram); reference parity +
@@ -33,27 +35,9 @@ from convex_batch_processor_spark.queries.llm73 import CANDIDATES  # noqa: E402
 _ROWS_ONLY = {"isotonic_calibration_pava"}
 
 
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
-def test_preflight_parity(spark, sf_dir, name):
-    fn, oracle = CANDIDATES[name]
-    assert oracle or name in _ROWS_ONLY, (
-        f"{name}: pre-flight candidates must be oracle-backed or in the "
-        "documented rows-only set")
-    ok, detail = compare(spark, sf_dir, name, fn, oracle)
-    assert ok, f"{name}: {detail}"
-
-
 def test_preflight_pack_is_registered_behind_the_window():
-    """Registered at the ROUND-11 CLOSE (one pack per round: llm72 was
-    round 10's, this is round 11's): all 10 candidates carry exactly
-    their pre-flighted (fn, oracle) pairs. The original behind-the-window
-    claim expired with the round-12 rotation (the close commit moved the
-    9 oracle-backed names INTO the round-12 window by design — NOTES
-    "Round-12 rotation plan"; test_registry_window.py pins the rotation
-    itself), so this test keeps only the registration-integrity half."""
-    from convex_batch_processor_spark.queries import QUERIES
-
-    assert len(QUERIES) == 301
+    """Only the documented llm73 query is rows-only; every other one is
+    registered with its DuckDB oracle."""
     for name, (fn, oracle) in CANDIDATES.items():
         assert name in QUERIES, name
         assert QUERIES[name].fn is fn, name

@@ -1,10 +1,9 @@
-"""Oracle parity for the round-13 pre-flight pack (queries/llm74.py).
+"""Oracle parity for the round-13 pack (queries/llm74.py).
 
-One pack registers per round (llm72 in r10, llm73 at the r11 close), so
-these candidates are NOT registered — this file runs each through the
-SAME compare() harness the driver-window fixture gates use, at sf0.001,
-a crafted boundary fixture, AND sf0.1 (the rounding-tie tier). A pinned
-test enforces the non-registration until the r12 close.
+This file runs each entry through the SAME compare() harness the
+driver-window fixture gates use, at a crafted boundary fixture AND
+sf0.1 (the rounding-tie tier); tests/test_oracle_parity.py covers
+sf0.001.
 """
 
 from __future__ import annotations
@@ -23,23 +22,18 @@ import duckdb  # noqa: E402
 
 from oracle_check import compare  # noqa: E402
 
-from convex_batch_processor_spark.queries.llm74 import CANDIDATES  # noqa: E402
+from convex_batch_processor_spark.queries import QUERIES  # noqa: E402
+
+CANDIDATES = {
+    n: (s.fn, s.oracle) for n, s in QUERIES.items()
+    if s.fn.__module__.endswith(".llm74")
+}
 
 
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
-def test_preflight_parity(spark, sf_dir, name):
-    fn, oracle = CANDIDATES[name]
-    assert oracle, f"{name}: every llm74 candidate is oracle-backed"
-    ok, detail = compare(spark, sf_dir, name, fn, oracle)
-    assert ok, f"{name}: {detail}"
-
-
-def test_preflight_pack_is_not_registered():
-    """One pack per round: llm73 registers at the r11 close, llm74 at
-    the r12 close — until then importing llm74 must not grow QUERIES."""
-    from convex_batch_processor_spark.queries import QUERIES
-
-    assert not (set(CANDIDATES) & set(QUERIES))
+def test_pack_is_fully_oracle_backed():
+    assert len(CANDIDATES) == 6
+    missing = [n for n, (fn, o) in CANDIDATES.items() if not o]
+    assert missing == []
 
 
 @pytest.fixture(scope="module")
@@ -198,9 +192,6 @@ def test_contamination_matrix_matches_python_reference_property(spark, tmp_path)
     equal a direct python set computation."""
     from hypothesis import given, settings, strategies as st
 
-    from convex_batch_processor_spark.queries.llm74 import (
-        CANDIDATES,
-    )
     from convex_batch_processor_spark.queries.llm72 import _SPAN_N
 
     fn, _ = CANDIDATES["cross_source_contamination_matrix"]

@@ -1,13 +1,9 @@
-"""Oracle parity for the round-14 pre-flight pack (queries/llm75.py).
+"""Oracle parity for the round-14 pack (queries/llm75.py).
 
-One pack registers per round (llm73 registered at the round-11 close,
-llm74 registers at the round-12 close), so these candidates are NOT
-registered — this file runs each one through the SAME compare() harness
-the driver-window fixture gates use, at sf0.001, a crafted boundary
-fixture, AND sf0.1 (the rounding-tie tier), so that when the pack
-registers (round-13 close, fronting the round-14 window) it has already
-shipped green for two full rounds. A pinned test enforces the
-non-registration until then.
+This file runs each entry through the SAME compare() harness the
+driver-window fixture gates use, at a crafted boundary fixture AND
+sf0.1 (the rounding-tie tier), plus a partition-invariance probe;
+tests/test_oracle_parity.py covers sf0.001.
 """
 
 from __future__ import annotations
@@ -28,7 +24,12 @@ import duckdb  # noqa: E402
 from determinism_check import check_partition_invariance  # noqa: E402
 from oracle_check import compare  # noqa: E402
 
-from convex_batch_processor_spark.queries.llm75 import CANDIDATES  # noqa: E402
+from convex_batch_processor_spark.queries import QUERIES  # noqa: E402
+
+CANDIDATES = {
+    n: (s.fn, s.oracle) for n, s in QUERIES.items()
+    if s.fn.__module__.endswith(".llm75")
+}
 
 
 def test_pack_is_fully_oracle_backed():
@@ -37,24 +38,6 @@ def test_pack_is_fully_oracle_backed():
     assert len(CANDIDATES) == 10
     missing = [n for n, (fn, o) in CANDIDATES.items() if not o]
     assert missing == []
-
-
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
-def test_preflight_parity(spark, sf_dir, name):
-    fn, oracle = CANDIDATES[name]
-    ok, detail = compare(spark, sf_dir, name, fn, oracle)
-    assert ok, f"{name}: {detail}"
-
-
-def test_preflight_pack_is_not_registered():
-    """One pack per round: llm73 registered at the round-11 close and
-    llm74 is queued for the round-12 close, so llm75 must not grow
-    QUERIES until the ROUND-13 close (it would displace a pinned driver
-    window)."""
-    from convex_batch_processor_spark.queries import QUERIES
-
-    assert len(QUERIES) in (301, 307)  # 307 once llm74 registers (r12)
-    assert not (set(CANDIDATES) & set(QUERIES))
 
 
 @pytest.fixture(scope="module")
@@ -281,11 +264,11 @@ def test_preflight_partition_invariance(spark, sf_dir, name):
 
 
 def test_preflight_plan_shapes(spark, sf_dir):
-    """Plan gate, pre-registration: no CartesianProduct anywhere; the
-    only unpartitioned windows run over bounded aggregates — the
-    |sources| rankings (rbo, schedule, interleave's source index) and
-    the vocab-frequency histogram (oov via histogram_rank). Record these
-    for the full-registry allowlist at registration (round-13 close)."""
+    """Plan gate: no CartesianProduct anywhere; the only unpartitioned
+    windows run over bounded aggregates — the |sources| rankings (rbo,
+    schedule, interleave's source index) and the vocab-frequency
+    histogram (oov via histogram_rank). These four are on the
+    full-registry allowlist in tests/test_plans.py."""
     from convex_batch_processor_spark.plans import explain as E
 
     bounded_ok = {

@@ -1,12 +1,9 @@
-"""Oracle parity for the round-15 pre-flight pack (queries/llm76.py).
+"""Oracle parity for the round-15 pack (queries/llm76.py).
 
-One pack registers per round (llm74 at the round-12 close, llm75 at the
-round-13 close), so these candidates are NOT registered — this file runs
-each one through the SAME compare() harness the driver-window fixture
-gates use, at sf0.001, a crafted boundary fixture, AND sf0.1 (the
-rounding-tie tier), so that when the pack registers (round-14 close,
-fronting the round-15 window) it has already shipped green for several
-rounds. A pinned test enforces the non-registration until then.
+This file runs each entry through the SAME compare() harness the
+driver-window fixture gates use, at a crafted boundary fixture AND
+sf0.1 (the rounding-tie tier), plus a partition-invariance probe;
+tests/test_oracle_parity.py covers sf0.001.
 """
 
 from __future__ import annotations
@@ -27,31 +24,18 @@ import duckdb  # noqa: E402
 from determinism_check import check_partition_invariance  # noqa: E402
 from oracle_check import compare  # noqa: E402
 
-from convex_batch_processor_spark.queries.llm76 import CANDIDATES  # noqa: E402
+from convex_batch_processor_spark.queries import QUERIES  # noqa: E402
+
+CANDIDATES = {
+    n: (s.fn, s.oracle) for n, s in QUERIES.items()
+    if s.fn.__module__.endswith(".llm76")
+}
 
 
 def test_pack_is_fully_oracle_backed():
     assert len(CANDIDATES) == 7
     missing = [n for n, (fn, o) in CANDIDATES.items() if not o]
     assert missing == []
-
-
-@pytest.mark.parametrize("name", sorted(CANDIDATES))
-def test_preflight_parity(spark, sf_dir, name):
-    fn, oracle = CANDIDATES[name]
-    ok, detail = compare(spark, sf_dir, name, fn, oracle)
-    assert ok, f"{name}: {detail}"
-
-
-def test_preflight_pack_is_not_registered():
-    """One pack per round: llm73 registered at the r11 close; llm74 and
-    llm75 are queued ahead of this pack, so llm76 must not grow QUERIES
-    until the ROUND-14 close."""
-    from convex_batch_processor_spark.queries import QUERIES
-
-    # 301 now; 307 after llm74 (r12 close); 317 after llm75 (r13 close)
-    assert len(QUERIES) in (301, 307, 317)
-    assert not (set(CANDIDATES) & set(QUERIES))
 
 
 @pytest.fixture(scope="module")
@@ -252,7 +236,7 @@ def test_preflight_partition_invariance(spark, sf_dir, name):
 
 
 def test_preflight_plan_shapes(spark, sf_dir):
-    """Plan gate, pre-registration: no CartesianProduct anywhere except
+    """Plan gate: no CartesianProduct anywhere except
     the audited bounded probe product (anisotropy: (n/20)^2 broadcast
     nested loop is acceptable — it IS the operator's documented
     verification baseline and the build side is broadcast), and no

@@ -1,30 +1,20 @@
-"""Round-12 driver-window contract (NOTES "Round-12 rotation plan").
+"""The 50-query window the default tier checks in depth, and the
+registry size pin.
 
-The driver verifies the FIRST 50 registry entries per round. Round 11
-closed the last ledger item (oracle-backed stale count 0, a first) and
-registered the pre-flighted llm73 pack at the BACK (291 -> 301). The
-round-12 window therefore carries the 9 oracle-backed llm73 names (the
-only never-verified backlog — placed by hand, since ``--next-window``
-only proposes already-verdicted names; the rows-only
-isotonic_calibration_pava records no hash verdict by contract) and 41
-machine-derived freshness pads. These tests pin that state so an
-accidental import reorder or registry growth fails loudly BEFORE the
-driver runs — no Spark session needed.
+``_R12_WINDOW`` is the last driver rotation (NOTES "Round-12 rotation
+plan"): 9 llm73 names and 41 already-verified pads.
+tests/test_determinism.py re-runs each entry under an alien session
+config and tests/test_plans.py sweeps its plans; the lints below keep
+every entry fixture-gated, oracle-backed and free of rule-14 rounded
+exact ratios. No Spark session needed.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from convex_batch_processor_spark.queries import QUERIES
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# The round-12 window (NOTES "Round-12 rotation plan": the 9 llm73
-# oracle names by hand + stale_green_check --next-window's pad
-# proposal, re-derived STRICT and matched exactly at the swap). Order
-# matters: the driver reads the first 50 registry entries positionally.
 _R12_WINDOW = [
     # llm73 pack, oracle-backed (9) — never-verified backlog
     "top_ngram_char_fraction", "substring_dedup_scrub",
@@ -54,45 +44,12 @@ _R12_WINDOW = [
 ]
 
 _PACK_TIER = _R12_WINDOW[:9]
-_PAD_TIER = _R12_WINDOW[9:]
 
 
-def _latest_verdicts() -> dict[str, int]:
-    seen: dict[str, int] = {}
-    for r in ("01", "02", "03", "04", "05", "06",
-              "07", "08", "09", "10", "11"):
-        path = os.path.join(_REPO, f"CORRECTNESS_r{r}.json")
-        with open(path) as f:
-            for name in json.load(f):
-                seen[name] = max(seen.get(name, 0), int(r))
-    return seen
-
-
-def test_registry_is_exactly_301():
-    """The llm73 pack registered at the r11 close (291 -> 301); the
-    llm74 pack registers at the ROUND-12 CLOSE (301 -> 307, NOTES
-    one-pack-per-round cadence). Pinned EXACTLY (ADVICE r11: a relaxed
-    tuple is dead slack that would mask a lost pack registration) —
-    this pin moves only in the same commit as a pre-flighted pack's
-    registration loop."""
-    assert len(QUERIES) == 301, len(QUERIES)
-
-
-def test_round12_window_is_the_pinned_rotation():
-    """The first 50 registry entries must equal the NOTES round-12
-    rotation (9 llm73 names + the --next-window pads), in order."""
-    assert list(QUERIES)[:50] == _R12_WINDOW
-
-
-def test_round12_window_tiers():
-    """Tier shape: the 9 pack names have NO driver verdict yet (the
-    whole point of fronting them); every pad is already verdicted
-    (freshness refresh, not backlog)."""
-    verdicts = _latest_verdicts()
-    never = [n for n in _PACK_TIER if n in verdicts]
-    assert never == [], f"pack names already verdicted: {never}"
-    missing = [n for n in _PAD_TIER if n not in verdicts]
-    assert missing == [], missing
+def test_registry_is_exactly_324():
+    """Every pack is registered, llm74-llm76 included (301 -> 324).
+    Pinned exactly: a relaxed bound would mask a lost pack registration."""
+    assert len(QUERIES) == 324, len(QUERIES)
 
 
 def test_round12_window_is_fixture_gated():
@@ -120,11 +77,7 @@ def test_round12_window_is_fixture_gated():
         )
         if not hasattr(mod, "test_preflight_boundary_parity"):
             continue  # no crafted fixture -> contributes nothing
-        qmod = importlib.import_module(mod.CANDIDATES_MODULE) if hasattr(
-            mod, "CANDIDATES_MODULE") else None
-        cands = getattr(mod, "CANDIDATES", None) or (
-            qmod.CANDIDATES if qmod else {})
-        gated.update(cands)
+        gated.update(mod.CANDIDATES)
     missing = [n for n in _R12_WINDOW if n not in gated]
     assert missing == [], missing
     # and the current pack tier must come from a suite, not be assumed
@@ -134,7 +87,7 @@ def test_round12_window_is_fixture_gated():
 def test_every_window_entry_is_oracle_backed():
     """A window slot spent on a rows-only entry is wasted — all 50 must
     carry DuckDB oracle SQL so the driver records a full hash verdict."""
-    missing = [n for n in list(QUERIES)[:50] if not QUERIES[n].oracle]
+    missing = [n for n in _R12_WINDOW if not QUERIES[n].oracle]
     assert missing == [], missing
 
 
@@ -153,7 +106,7 @@ def test_window_oracles_carry_no_rounded_exact_ratio():
     trans = re.compile(r"\b(ln|log|log10|log2|sqrt|exp|pow|power)\s*\(", re.I)
     cents = re.compile(r"^\s*(CAST\()?\s*\w+(\.\w+)?\s*\*\s*100\s*\)?\s*$")
     offenders: list[tuple[str, str]] = []
-    for name in list(QUERIES)[:50]:
+    for name in _R12_WINDOW:
         sql = QUERIES[name].oracle or ""
         sql = re.sub(r"--[^\n]*", "", sql)  # strip SQL comments
         for m in re.finditer(r"round\s*\(", sql, re.I):
